@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract): runs every
@@ -943,15 +945,18 @@ object Bench {
       .mkString("[", ",", "]")
     // the full name-keyed per-query record (see perQueryJson): its
     // line prints FIRST so the bulk stays outside the tail window,
-    // and the sidecar file write is fault-isolated like everything
-    // else on the artifact path
+    // and a failed sidecar write warns (before the artifact lines, so
+    // outside the tail) instead of costing the run
     val perqLine = perQueryJson(results, results.map(_._2).sum, cpus,
       new java.io.File(sfDir).getName)
     println("BENCH_PERQ " + perqLine)
     try {
       val pq = new java.io.PrintWriter("BENCH_PERQUERY.json")
       try pq.write(perqLine + "\n") finally pq.close()
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"WARN: could not write BENCH_PERQUERY.json: $e")
+    }
     // the artifact lines must be the LAST output the driver's
     // 2000-char tail sees: stop Spark FIRST (its shutdown path logs
     // WARNs under load — the r11 artifact lost the main line's front

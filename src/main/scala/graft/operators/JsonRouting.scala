@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** JSON / struct layer + the reference's dual-branch valid/invalid
+/** JSON / struct layer + the reference's valid/invalid
   * routing graph (SURVEY.md §2.9 X7-X9, §2.11 T2;
   * reference: infrastructure/stream_inference.py:62-148).
   *
@@ -18,7 +18,7 @@ object JsonRouting {
   /** Payload schema for events.props — fixed/declared, never inferred,
     * exactly like the reference's request schema
     * (stream_inference.py:28-42). from_json null-fills on mismatch,
-    * which is what drives the invalid branch.
+    * which is what drives the sentinel route.
     */
   val propsSchema: StructType = new StructType().add("k", IntegerType, nullable = true)
 
@@ -32,15 +32,24 @@ object JsonRouting {
       .withColumn("payload_json", to_json(struct(col("event_id"), col("k"))))
       .orderBy("event_id")
 
-  /** T2+F4+F5+X6+U2: the dual-branch routing graph. A deterministic
+  /** T2+F4+F5+X6+U2: the validity routing graph. A deterministic
     * tenth of the rows get a corrupted payload (standing in for the
     * broken/missing/wrong-type Kafka messages of
-    * test_stream_interfaces.py:34-85); from_json null-fills those, the
-    * AND-folded validity flag routes them to the sentinel branch
-    * (prediction = -1, stream_inference.py:112-126), and unionByName
-    * reunites the branches.
-    */
-  /** `ordered = false` for streaming frames — global sort is illegal on
+    * test_stream_interfaces.py:34-85); from_json null-fills those, and
+    * the AND-folded validity flag sends them to the sentinel
+    * (prediction = -1, stream_inference.py:112-126).
+    *
+    * The reference's valid and invalid branches (split, then union)
+    * map onto one CASE projection over the flagged rows — the same
+    * CASE the q24/q25 oracle twins compute. `is_valid` is an AND of
+    * `isNotNull` checks, so it is never null and every row takes
+    * exactly one of the two routes. A single projection parses each
+    * payload once, runs one task per source partition, and lets a
+    * streaming sink write one file per partition per epoch; a union
+    * would rescan and reparse the source once per branch and double
+    * the partitions.
+    *
+    * `ordered = false` for streaming frames — global sort is illegal on
     * an unbounded stream (and meaningless: order is per-micro-batch).
     */
   def validityRouting(ev: DataFrame, ordered: Boolean = true): DataFrame = {
@@ -49,17 +58,18 @@ object JsonRouting {
     val parsed = corrupted.withColumn("data", from_json(col("raw"), propsSchema))
     val checks = Seq(col("data").isNotNull, col("data.k").isNotNull, col("value").isNotNull)
     val flagged = parsed.withColumn("is_valid", checks.reduce(_ && _))
-    val valid = flagged.filter("is_valid")
-      .select(col("event_id"), col("data.k").as("k"), (col("data.k") % 2).as("prediction"))
-    val invalid = flagged.filter("NOT is_valid")
-      .select(col("event_id"), lit(-1).as("k"), lit(-1).as("prediction"))
-    val routed = valid.unionByName(invalid)
+    val valid = col("is_valid")
+    val routed = flagged.select(col("event_id"),
+      when(valid, col("data.k")).otherwise(-1).as("k"),
+      when(valid, col("data.k") % 2).otherwise(-1).as("prediction"))
     if (ordered) routed.orderBy("event_id") else routed
   }
 
   /** The full response-envelope shape of stream_inference.py:132-148:
     * routed rows re-wrapped as a nested JSON envelope
-    * {event_id, status, result:{k, prediction}}.
+    * {event_id, status, result:{k, prediction}}. Built on the one-pass
+    * [[validityRouting]] projection, so the whole envelope is a single
+    * narrow plan: one JSON parse and one task per source partition.
     */
   def responseEnvelope(ev: DataFrame, ordered: Boolean = true): DataFrame = {
     val env = validityRouting(ev, ordered = false)

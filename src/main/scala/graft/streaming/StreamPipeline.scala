@@ -10,8 +10,13 @@ import graft.operators.JsonRouting
 
 /** Structured-Streaming wiring of the reference's inference
   * micro-service graph (infrastructure/stream_inference.py:45-181):
-  * source → from_json → flatten → validity split → sentinel union →
-  * to_json envelope → append sink with checkpoint.
+  * source → from_json → flatten → validity CASE (the reference's
+  * valid/invalid split and sentinel union, fused into one projection)
+  * → to_json envelope → append sink with checkpoint. The fused
+  * projection parses each payload once and runs one task per source
+  * partition, so a micro-batch is one wave of tasks and
+  * [[exactlyOnceSink]] commits at most one file per partition per
+  * epoch.
   *
   * The Kafka connector jar is not in this container, so sources are
   * file/rate/memory (the operator graph is IDENTICAL — Structured

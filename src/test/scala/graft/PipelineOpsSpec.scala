@@ -33,7 +33,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val sentinel = res.filter(col("prediction") === -1).count()
     val expected = events.filter(col("event_id") % 10 === 0).count()
     assert(sentinel == expected)
-    assert(res.count() == events.count()) // union loses nothing
+    assert(res.count() == events.count()) // the CASE projection keeps every row
     assert(res.filter(col("prediction") =!= -1)
       .filter(col("prediction") =!= col("k") % 2).count() == 0)
   }

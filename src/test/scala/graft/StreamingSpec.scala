@@ -27,8 +27,16 @@ class StreamingSpec extends AnyFunSuite {
 
   test("routing graph produces identical results in batch and streaming (T1/T2/U2)") {
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp, Long, String, Double, String)]
+    val mem = MemoryStream[(Long, Timestamp, Long, String, Option[Double], String)]
     val stream = mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    // every validity check gets a failing row: the %10 corruption
+    // (event 10, from eventRows), a null value, a payload with no k,
+    // and a k that is not an integer
+    val t = Timestamp.valueOf("2026-01-01 11:20:00")
+    val rows = eventRows.map { case (id, ts, u, et, v, p) => (id, ts, u, et, Option(v), p) } ++ Seq(
+      (21L, t, 9L, "click", None, """{"k": 5}"""),
+      (22L, t, 9L, "view", Some(1.0), """{"j": 5}"""),
+      (23L, t, 9L, "view", Some(2.0), """{"k": "five"}"""))
 
     val query = StreamPipeline.appendSink(
         StreamPipeline.routedResponses(stream),
@@ -36,21 +44,67 @@ class StreamingSpec extends AnyFunSuite {
         checkpointDir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString,
         queryName = "routed_mem").start()
     try {
-      mem.addData(eventRows: _*)
+      mem.addData(rows: _*)
       query.processAllAvailable()
       val streamed = spark.table("routed_mem").orderBy("event_id").collect()
 
       val batch = graft.operators.JsonRouting.responseEnvelope(
-        eventRows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
+        rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"))
         .orderBy("event_id").collect()
 
       assert(streamed.length == batch.length)
       streamed.zip(batch).foreach { case (s, b) => assert(s == b) }
-      // the corrupted-payload row (event_id 10) took the sentinel path
-      val bad = streamed.find(_.getLong(0) == 10L).get
-      assert(bad.getString(1) == "error")
-      assert(bad.getString(2).contains("\"prediction\":-1"))
+      // exactly the rows failing a check took the sentinel path
+      val bad = streamed.filter(_.getString(1) == "error")
+      assert(bad.map(_.getLong(0)).toSet == Set(10L, 21L, 22L, 23L))
+      bad.foreach(r => assert(r.getString(2).contains(
+        "\"result\":{\"k\":-1,\"prediction\":-1}"), r.getString(2)))
+      assert(streamed.find(_.getLong(0) == 2L).get.getString(2) ==
+        """{"event_id":2,"status":"success","result":{"k":7,"prediction":1}}""")
     } finally query.stop()
+  }
+
+  test("routing graph runs in one pass: no Union, one JSON parse, one file per partition per epoch") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    implicit val sqlCtx = spark.sqlContext
+    object Plans extends AdaptiveSparkPlanHelper
+    def assertOnePass(plan: SparkPlan): Unit = {
+      assert(Plans.collect(plan) { case u: UnionExec => u }.isEmpty, plan.toString)
+      assert(Plans.flatMap(plan)(_.expressions.flatMap(
+        _.collect { case j: JsonToStructs => j })).size == 1, plan.toString)
+    }
+
+    val events = graft.engine.Tables.events(spark, sfDir)
+    val env = graft.operators.JsonRouting.responseEnvelope(events, ordered = false)
+    env.collect()
+    assertOnePass(env.queryExecution.executedPlan)
+
+    val parts = 3
+    val ids = 1L to 30L // round-robin over 3 partitions: each gets a %10 row
+    val t = Timestamp.valueOf("2026-01-01 12:00:00")
+    val batchRows = ids.map(id => (id, t, 1L, "click", 1.0, s"""{"k": $id}"""))
+
+    val mem = MemoryStream[(Long, Timestamp, Long, String, Double, String)](parts)
+    val outDir = java.nio.file.Files.createTempDirectory("graft-1p-out").toString
+    val query = StreamPipeline.exactlyOnceSink(
+        StreamPipeline.routedResponses(
+          mem.toDF().toDF("event_id", "ts", "user_id", "event_type", "value", "props")),
+        outDir, java.nio.file.Files.createTempDirectory("graft-1p-ckpt").toString).start()
+    try {
+      mem.addData(batchRows: _*)
+      query.processAllAvailable()
+      assertOnePass(query.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan)
+    } finally query.stop()
+    val epoch0 = new java.io.File(outDir, "epoch=0")
+    val partFiles = epoch0.list().filter(_.startsWith("part-"))
+    assert(partFiles.length <= parts, partFiles.mkString(", "))
+    val committed = spark.read.parquet(outDir)
+    assert(committed.count() == ids.size)
+    assert(committed.filter(col("status") === "error").count() == 3)
   }
 
   test("watermarked windowed aggregation emits finalized windows (stateful scale path)") {
