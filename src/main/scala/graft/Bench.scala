@@ -4,6 +4,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.Tiers
+
 /** Per-round benchmark main (driver contract): runs every
   * [[SparkEntry.queries]] entry against SPARK_GRAFT_SF_DIR and prints
   * ONE JSON line `{"metric":"total","unit":"sec",…,"queries":…,…,
@@ -43,13 +45,14 @@ import org.apache.spark.sql.SparkSession
   *    query, a dedicated post-q41 probe, end — map positions via the
   *    numeric query order; e.g. `[2,5,4,4]` = scan 0.2 s, shuffle
   *    0.5 s, I/O 0.4 s, load 4);
-  *  - the content-addressed IVF index that q64/q74 share is
-  *    pre-built during warm-up (it is corpus-identity-keyed, so the
-  *    build amortizes across every index-backed query — the
-  *    operator's own production story) and its cost is recorded as
-  *    `ivf_build_sec` in BENCH_META (0 = reused an existing index,
-  *    -1 = build failed): a cold-index run is attributable to the
-  *    build instead of inflating q64's measured time;
+  *  - every materialized tier in [[graft.engine.Tiers]] is pre-built
+  *    during warm-up (it is corpus-identity-keyed, so the build
+  *    amortizes across every query that probes it — the operators'
+  *    own production story) and its cost is recorded as
+  *    `<key>_build_sec` in BENCH_META and under `builds_sec` on the
+  *    main line (0 = reused, -1 = build failed, with a WARN on
+  *    stderr): a cold-tier run is attributable to the build instead
+  *    of inflating a probe's measured time;
   *  - every query carries a CONTENTION SAMPLE (1-minute load average
   *    + system-wide /proc/diskstats read delta over exactly the
   *    measured span — two cheap reads), compressed onto the main line
@@ -442,280 +445,55 @@ object Bench {
       dropAllState()
       (System.nanoTime() - mlWarmT0) / 1e9
     } catch { case _: Throwable => -1.0 }
-    // pre-build the shared IVF index (content-addressed ⇒ legitimate
-    // amortization: production builds once per corpus, probes many
-    // times). 0 = an existing index was reused, -1 = build failed —
-    // q64's measured time is the PROBE either way, never the build
-    val ivfT0 = System.nanoTime()
-    val ivfBuildSec = try {
-      val built = graft.operators.Similarity.prebuildIvfIndex(
-        graft.engine.Tables.embeddings(spark, sfDir),
-        SparkEntry.ivfIndexFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - ivfT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the shared dedup cascade (verified pairs + CC labels,
-    // content-addressed like the IVF index): q33/q68/q72/q104 all
-    // probe it, so the one LSH → verify → CC build is a corpus-level
-    // one-off, not four per-query rebuilds. 0 = reused, -1 = failed.
-    val ccT0 = System.nanoTime()
-    val ccBuildSec = try {
-      val built = graft.operators.Dedup.prebuildCascade(
-        graft.engine.Tables.documents(spark, sfDir),
-        SparkEntry.ccCascadeFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - ccT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the q264 append fixture's YESTERDAY cascade (the
-    // corpus minus the doc_id % 10 == 7 batch) — content-addressed
-    // like the main cascade, built once per corpus snapshot so the
-    // measured q264 is the append's reuse check + pair probe, never
-    // the old-slice LSH build. 0 = reused, -1 = failed.
-    val ccoT0 = System.nanoTime()
-    val ccoBuildSec = try {
-      val built = graft.operators.Dedup.prebuildCascade(
-        graft.engine.Tables.documents(spark, sfDir)
-          .filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 7),
-        SparkEntry.ccOldCascadeFor(spark, sfDir), labels = false)
-      dropAllState()
-      if (built) (System.nanoTime() - ccoT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the simhash pair frame (q71/q229 probe it): one
-    // banding + Hamming-verify build per corpus snapshot. 0 = reused.
-    val shT0 = System.nanoTime()
-    val shBuildSec = try {
-      val built = graft.operators.Dedup.prebuildSimhashPairs(
-        graft.engine.Tables.documents(spark, sfDir),
-        SparkEntry.simhashFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - shT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the q267 append fixture's YESTERDAY simhash frame
-    // (sig + pairs over the corpus minus the doc_id % 10 == 7 batch) —
-    // the measured q267 is the batch hash + delta landing (or its
-    // reuse check), never the old-slice build. 0 = reused.
-    val shoT0 = System.nanoTime()
-    val shoBuildSec = try {
-      val built = graft.operators.Dedup.prebuildSimhashPairs(
-        graft.engine.Tables.documents(spark, sfDir)
-          .filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 7),
-        SparkEntry.simhashOldFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - shoT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the PQ index (codes + codebooks; q192/q193/q194 probe
-    // it): one train per subspace per corpus snapshot. 0 = reused.
-    val pqT0 = System.nanoTime()
-    val pqBuildSec = try {
-      val built = graft.operators.Similarity.prebuildPqIndex(
-        graft.engine.Tables.embeddings(spark, sfDir),
-        SparkEntry.pqIndexFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - pqT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the q266 append fixture's YESTERDAY PQ index (books +
-    // codes over the corpus minus the vec_id % 10 == 7 batch) — the
-    // measured q266 is the map-only batch encode + delta landing (or
-    // its reuse check), never the old-slice kmeans train. 0 = reused.
-    val pqoT0 = System.nanoTime()
-    val pqoBuildSec = try {
-      val built = graft.operators.Similarity.prebuildPqIndex(
-        graft.engine.Tables.embeddings(spark, sfDir)
-          .filter(org.apache.spark.sql.functions.col("vec_id") % 10 =!= 7),
-        SparkEntry.pqOldIndexFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - pqoT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the four verified-pair family frames (prefix-Jaccard,
-    // containment, SNM, winnowing — q135/q140/q176/q184 and the q234
-    // audit all probe them): one verify join per family per corpus
-    // snapshot. 0 = reused, -1 = failed.
-    val famT0 = System.nanoTime()
-    val famBuildSec = try {
-      val built = graft.operators.Dedup.prebuildPairFamilies(
-        graft.engine.Tables.documents(spark, sfDir),
-        SparkEntry.ccCascadeFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - famT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the parsed-props long frame (q173/q222 probe it): one
-    // JSON parse per corpus snapshot. 0 = reused, -1 = failed.
-    val prT0 = System.nanoTime()
-    val propsBuildSec = try {
-      val built = graft.operators.JsonRouting.prebuildPropsLong(
-        graft.engine.Tables.events(spark, sfDir),
-        SparkEntry.propsFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - prT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the aHash signature frame (q210/q211/q248 probe it):
-    // one per-byte sampling pass per corpus snapshot. 0 = reused.
-    val ahT0 = System.nanoTime()
-    val ahBuildSec = try {
-      val built = graft.operators.Multimodal.prebuildAhashSignatures(
-        graft.engine.Tables.documents(spark, sfDir),
-        SparkEntry.ahashFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - ahT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the exact graded ANN ground truth (q244 scores both
-    // index arms against it): one brute-force panel ranking per corpus
-    // snapshot. 0 = reused, -1 = failed.
-    val gtT0 = System.nanoTime()
-    val gtBuildSec = try {
-      val built = graft.operators.Similarity.prebuildAnnGroundTruth(
-        graft.engine.Tables.embeddings(spark, sfDir),
-        SparkEntry.annGtFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - gtT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the token-tf frame (q130/q137/q139/q144/q146 and the
-    // retrieval-arm builds all probe it): one text explode + tf
-    // aggregate per corpus snapshot. 0 = reused, -1 = failed.
-    val tokT0 = System.nanoTime()
-    val tokBuildSec = try {
-      val built = graft.operators.TextAnalysis.prebuildTokenTf(
-        graft.engine.Tables.documents(spark, sfDir),
-        SparkEntry.tokenTfFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - tokT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the retrieval-arm rankings + relevance labels
-    // (q138/q152/q213/q237 probe them), fed from the materialized tf
-    // frame just built. 0 = reused, -1 = failed.
-    val armT0 = System.nanoTime()
-    val armBuildSec = try {
-      val docs = graft.engine.Tables.documents(spark, sfDir)
-      val built = graft.operators.TextAnalysis.prebuildRetrievalArms(
-        docs, SparkEntry.armsFor(spark, sfDir),
-        Some(graft.operators.TextAnalysis.tokenTfCached(docs,
-          SparkEntry.tokenTfFor(spark, sfDir))))
-      dropAllState()
-      if (built) (System.nanoTime() - armT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the converged TextRank frame (q137 probes it): the 10
-    // damped iterations run once per corpus snapshot, fed from the
-    // materialized tf frame just built. 0 = reused, -1 = failed.
-    val trT0 = System.nanoTime()
-    val trBuildSec = try {
-      val docs = graft.engine.Tables.documents(spark, sfDir)
-      val built = graft.operators.TextAnalysis.prebuildTextRank(
-        docs, SparkEntry.textRankFor(spark, sfDir),
-        Some(graft.operators.TextAnalysis.tokenTfCached(docs,
-          SparkEntry.tokenTfFor(spark, sfDir))))
-      dropAllState()
-      if (built) (System.nanoTime() - trT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the k-means cells frame (q142/q155/q208 probe it):
-    // one 3-iteration Lloyd train per embeddings snapshot. 0 = reused,
-    // -1 = failed.
-    val kmT0 = System.nanoTime()
-    val kmBuildSec = try {
-      val built = graft.operators.Similarity.prebuildKmeansCells(
-        graft.engine.Tables.embeddings(spark, sfDir),
-        SparkEntry.kmCellsFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - kmT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the embedding-CC label frame (q79 probes it): one
-    // bucketed-pair + pointer-jumping CC run per embeddings snapshot —
-    // the suite's most burst-sensitive shape, retired from measured
-    // time the same way the text-side cascade was. 0 = reused.
-    val sccT0 = System.nanoTime()
-    val sccBuildSec = try {
-      val built = graft.operators.Dedup.prebuildSemanticCc(
-        graft.engine.Tables.embeddings(spark, sfDir),
-        SparkEntry.semCcFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - sccT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the q265 append fixture's YESTERDAY semcc frame (the
-    // embeddings minus the vec_id % 10 == 7 batch) — the cco story on
-    // the embedding side. 0 = reused, -1 = failed.
-    val sccoT0 = System.nanoTime()
-    val sccoBuildSec = try {
-      val built = graft.operators.Dedup.prebuildSemanticCc(
-        graft.engine.Tables.embeddings(spark, sfDir)
-          .filter(org.apache.spark.sql.functions.col("vec_id") % 10 =!= 7),
-        SparkEntry.semCcOldFor(spark, sfDir), labels = false)
-      dropAllState()
-      if (built) (System.nanoTime() - sccoT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the bigram LM (q121 scores against it): one model
-    // scan per corpus snapshot. 0 = reused, -1 = failed.
-    val blmT0 = System.nanoTime()
-    val blmBuildSec = try {
-      val built = graft.operators.TextAnalysis.prebuildBigramLm(
-        graft.engine.Tables.documents(spark, sfDir),
-        SparkEntry.bigramLmFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - blmT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // pre-build the positional phrase index (q196 probes it): one
-    // trigram adjacency self-join per corpus snapshot. 0 = reused,
-    // -1 = failed.
-    val postT0 = System.nanoTime()
-    val postBuildSec = try {
-      val built = graft.operators.TextAnalysis.prebuildPhraseIndex(
-        graft.engine.Tables.documents(spark, sfDir),
-        SparkEntry.phraseIdxFor(spark, sfDir))
-      dropAllState()
-      if (built) (System.nanoTime() - postT0) / 1e9 else 0.0
-    } catch { case _: Throwable => -1.0 }
-    // PRE-TOUCH every content-addressed artifact: stream-read every
-    // byte of every frame file once, so the measured probes never pay
-    // a cold or contended FIRST read of their materialized inputs (the
-    // r12 q64–q110 cluster: the CAL I/O probe inflated 2.2–3.7× in
-    // exactly the segments where the frame-consumer queries spiked —
-    // the build-once-probe-many design is right for a real cluster,
-    // but in a co-tenant container the first read of each frame landed
-    // inside a measured probe). A raw byte stream warms the page cache
-    // with zero Spark overhead (the kernel read() side effect cannot be
-    // elided). pretouch_mb records how much the probes never re-read
-    // cold.
+    // pre-build every registered tier (content-addressed ⇒ legitimate
+    // amortization: production builds once per corpus snapshot and
+    // probes many times), in registry order. Each reads 0 when an
+    // existing tier was reused, its build seconds when built and -1
+    // when the build failed — a probe's measured time is never a build
+    def tierStep[A](t: Tiers.Tier, what: String)(f: => A): Option[A] =
+      try Some(f) catch { case NonFatal(e) =>
+        System.err.println(s"WARN: tier ${t.key} $what failed: $e")
+        None
+      }
+    val tierBuildSec = Tiers.built.map { t =>
+      val t0 = System.nanoTime()
+      t.key -> tierStep(t, "build") {
+        val built = t.build(spark, sfDir)
+        dropAllState()
+        if (built) (System.nanoTime() - t0) / 1e9 else 0.0
+      }.getOrElse(-1.0)
+    }
+    // PRE-TOUCH every built tier: stream-read every byte of every frame
+    // file once, so the measured probes never pay a cold or contended
+    // FIRST read of their materialized inputs (the r12 q64–q110
+    // cluster: the CAL I/O probe inflated 2.2–3.7× in exactly the
+    // segments where the frame-consumer queries spiked). A raw byte
+    // stream warms the page cache with zero Spark overhead. Per tier,
+    // so one failed build never leaves the remaining frames cold;
+    // pretouch_mb records how much the probes never re-read cold.
     val touchT0 = System.nanoTime()
-    var pretouchMb = -1.0
-    val pretouchSec = try {
-      var bytes = 0L
-      val buf = new Array[Byte](1 << 20)
-      def touch(f: java.io.File): Unit =
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(touch))
-        else {
-          val in = new java.io.FileInputStream(f)
-          try {
-            var n = in.read(buf)
-            while (n >= 0) { bytes += n; n = in.read(buf) }
-          } finally in.close()
-        }
-      // per-directory try: one failed build (its dir recorded -1 and
-      // possibly absent) must not leave every REMAINING frame cold —
-      // exactly the first-read exposure the pre-touch exists to remove
-      Seq(SparkEntry.ivfIndexFor(spark, sfDir),
-        SparkEntry.ccCascadeFor(spark, sfDir),
-        SparkEntry.ccOldCascadeFor(spark, sfDir),
-        SparkEntry.simhashFor(spark, sfDir),
-        SparkEntry.simhashOldFor(spark, sfDir),
-        SparkEntry.pqIndexFor(spark, sfDir),
-        SparkEntry.pqOldIndexFor(spark, sfDir),
-        SparkEntry.propsFor(spark, sfDir),
-        SparkEntry.tokenTfFor(spark, sfDir),
-        SparkEntry.armsFor(spark, sfDir),
-        SparkEntry.annGtFor(spark, sfDir),
-        SparkEntry.ahashFor(spark, sfDir),
-        SparkEntry.kmCellsFor(spark, sfDir),
-        SparkEntry.phraseIdxFor(spark, sfDir),
-        SparkEntry.textRankFor(spark, sfDir),
-        SparkEntry.bigramLmFor(spark, sfDir),
-        SparkEntry.semCcFor(spark, sfDir),
-        SparkEntry.semCcOldFor(spark, sfDir))
-        .foreach { d =>
-          try touch(new java.io.File(d))
-          catch { case _: Throwable => () }
-        }
-      pretouchMb = bytes / 1e6
-      (System.nanoTime() - touchT0) / 1e9
-    } catch { case _: Throwable => -1.0 }
-    println(s"""BENCH_META {"load_avg_start":${dec(loadStart, 2)},"available_processors":${rt.availableProcessors()},"heap_max_gb":${dec(rt.maxMemory() / 1e9, 1)},"spark_cpus":${jsonStr(cpus)},"mlwarm_sec":${dec(mlWarmSec, 2)},"ivf_build_sec":${dec(ivfBuildSec, 2)},"ccpairs_build_sec":${dec(ccBuildSec, 2)},"cco_build_sec":${dec(ccoBuildSec, 2)},"shash_build_sec":${dec(shBuildSec, 2)},"sho_build_sec":${dec(shoBuildSec, 2)},"pq_build_sec":${dec(pqBuildSec, 2)},"pqo_build_sec":${dec(pqoBuildSec, 2)},"fam_build_sec":${dec(famBuildSec, 2)},"props_build_sec":${dec(propsBuildSec, 2)},"gt_build_sec":${dec(gtBuildSec, 2)},"ah_build_sec":${dec(ahBuildSec, 2)},"tok_build_sec":${dec(tokBuildSec, 2)},"arm_build_sec":${dec(armBuildSec, 2)},"km_build_sec":${dec(kmBuildSec, 2)},"post_build_sec":${dec(postBuildSec, 2)},"tr_build_sec":${dec(trBuildSec, 2)},"blm_build_sec":${dec(blmBuildSec, 2)},"scc_build_sec":${dec(sccBuildSec, 2)},"scco_build_sec":${dec(sccoBuildSec, 2)},"pretouch_sec":${dec(pretouchSec, 2)},"pretouch_mb":${dec(pretouchMb, 1)},"sf":${jsonStr(sfDir)}}""")
+    var touchedBytes = 0L
+    val buf = new Array[Byte](1 << 20)
+    def touch(f: java.io.File): Unit =
+      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(touch))
+      else if (f.isFile) {
+        val in = new java.io.FileInputStream(f)
+        try {
+          var n = in.read(buf)
+          while (n >= 0) { touchedBytes += n; n = in.read(buf) }
+        } finally in.close()
+      }
+    val touched = scala.collection.mutable.Set.empty[String]
+    Tiers.built.foreach { t =>
+      tierStep(t, "pre-touch") {
+        val dir = t(spark, sfDir)
+        if (touched.add(dir)) touch(new java.io.File(dir))
+      }
+    }
+    val pretouchSec = (System.nanoTime() - touchT0) / 1e9
+    val buildsMeta = tierBuildSec
+      .map { case (k, v) => s""""${k}_build_sec":${dec(v, 2)}""" }.mkString(",")
+    println(s"""BENCH_META {"load_avg_start":${dec(loadStart, 2)},"available_processors":${rt.availableProcessors()},"heap_max_gb":${dec(rt.maxMemory() / 1e9, 1)},"spark_cpus":${jsonStr(cpus)},"mlwarm_sec":${dec(mlWarmSec, 2)},$buildsMeta,"pretouch_sec":${dec(pretouchSec, 2)},"pretouch_mb":${dec(touchedBytes / 1e6, 1)},"sf":${jsonStr(sfDir)}}""")
 
     // a probe must never abort the run: a broken environment (e.g.
     // missing data dir) should still produce BENCH_META, per-query
@@ -1037,15 +815,7 @@ object Bench {
     // whether the content-addressed builds were reused (0), rebuilt
     // (secs), or failed (-1) in the run of record — plus the pretouch
     // cost that moved cold-read exposure out of the measured probes
-    val buildsJson = Seq(
-      "ivf" -> ivfBuildSec, "cc" -> ccBuildSec, "cco" -> ccoBuildSec,
-      "sh" -> shBuildSec, "sho" -> shoBuildSec,
-      "pq" -> pqBuildSec, "pqo" -> pqoBuildSec,
-      "fam" -> famBuildSec, "props" -> propsBuildSec,
-      "gt" -> gtBuildSec, "ah" -> ahBuildSec, "tok" -> tokBuildSec,
-      "arm" -> armBuildSec, "km" -> kmBuildSec, "post" -> postBuildSec,
-      "tr" -> trBuildSec, "blm" -> blmBuildSec, "scc" -> sccBuildSec,
-      "scco" -> sccoBuildSec, "touch" -> pretouchSec)
+    val buildsJson = (tierBuildSec :+ ("touch" -> pretouchSec))
       // the slowest_sec 99 s display cap (r18 window budget); a build
       // past it is pathology, and the exact figure is in BENCH_META
       .map { case (k, v) => jsonStr(k) + ":" + qnum(math.min(v, 99.0)) }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.engine.Tables
+import graft.engine.{Tables, Tiers}
 import graft.ml.MlQueries
 import graft.operators._
 
@@ -66,13 +66,13 @@ object SparkEntry {
     "q30_exact_dedup"      -> ((s, d) => Dedup.exactDedup(Tables.documents(s, d))),
     "q31_minhash_sig"      -> ((s, d) => Dedup.minhashSignatures(Tables.documents(s, d))),
     "q32_minhash_pairs"    -> ((s, d) =>
-      Dedup.minhashCandidatePairsCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.minhashCandidatePairsCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // verified near-dup pairs, served from the materialized cascade
     // (content-addressed; q33/q68/q72/q104 share ONE build — the
-    // ivfIndexFor pattern: production runs the LSH cascade once per
+    // IVF index pattern: production runs the LSH cascade once per
     // corpus snapshot and probes it from every consumer)
     "q33_near_dup"         -> ((s, d) =>
-      Dedup.nearDupPairsCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.nearDupPairsCached(Tables.documents(s, d), Tiers.cc(s, d))),
     "q34_simhash"          -> ((s, d) => Dedup.simhashSignatures(Tables.documents(s, d))),
     // multimodal plumbing
     "q35_binary_meta"      -> ((s, d) => Multimodal.binaryMeta(Tables.documents(s, d))),
@@ -96,7 +96,7 @@ object SparkEntry {
     "q50_tfidf_top_term"   -> ((s, d) => TextAnalysis.tfidfTopTerm(
       Tables.documents(s, d),
       tfIn = Some(TextAnalysis.tokenTfCached(Tables.documents(s, d),
-        tokenTfFor(s, d))))),
+        Tiers.tok(s, d))))),
     "q51_salted_agg"       -> ((s, d) => SetOps.saltedEventTypeCounts(Tables.events(s, d))),
     // MLlib LSH variants (model-based hash families ⇒ rows-only)
     "q52_minhash_mllib"    -> ((s, d) => Dedup.minhashLshMllib(Tables.documents(s, d))),
@@ -106,14 +106,14 @@ object SparkEntry {
     // pair-based cleaning, probing the shared materialized cascade
     // (restriction to canonical ids inside — see q72's note)
     "q55_cleaning_pipeline" -> ((s, d) =>
-      Dedup.cleaningPipelineCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.cleaningPipelineCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // training-data corpus management (deterministic split, eval-set
     // decontamination, repetition quality gate)
     "q57_deterministic_split" -> ((s, d) => TrainingData.deterministicSplit(Tables.documents(s, d))),
     "q58_decontaminate"    -> ((s, d) => {
       val docs = Tables.documents(s, d)
       TrainingData.evalDecontaminate(docs,
-        shingles = Some(Dedup.shingleDocsCached(docs, ccCascadeFor(s, d))))
+        shingles = Some(Dedup.shingleDocsCached(docs, Tiers.cc(s, d))))
     }),
     "q59_repetition_ratio" -> ((s, d) => TrainingData.repetitionRatio(Tables.documents(s, d))),
     // as-of join composed from built-ins (union + window carry-forward)
@@ -129,16 +129,16 @@ object SparkEntry {
     // canonical ids inside — pair-local cascade ⇒ identical result,
     // spec-asserted + hash-proven)
     "q72_cleaning_clustered" -> ((s, d) =>
-      Dedup.cleaningPipelineClusteredCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.cleaningPipelineClusteredCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // simhash near-dup pairs via pigeonhole block banding
     // served from the materialized simhash frame (content-addressed;
     // q71/q229 share ONE banding + Hamming-verify build)
     "q71_simhash_pairs"    -> ((s, d) =>
-      Dedup.simhashPairsCached(Tables.documents(s, d), simhashFor(s, d))),
+      Dedup.simhashPairsCached(Tables.documents(s, d), Tiers.sh(s, d))),
     // near-dup clustering: connected components over verified pairs,
     // canonical representative = component min doc_id
     "q68_dup_clusters"     -> ((s, d) =>
-      Dedup.dupClustersCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.dupClustersCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // per-source mixture controls: deterministic cap (runs on the
     // custom TopKPerKey heap operator) + token accounting
     "q69_source_cap"       -> ((s, d) => TrainingData.sourceCap(Tables.documents(s, d))),
@@ -159,13 +159,13 @@ object SparkEntry {
     // scan is dynamically partition-pruned to the queried buckets;
     // the index dir is content-addressed so it can never be stale
     "q64_ann_ivf"          -> ((s, d) =>
-      Similarity.annTopKIvf(Tables.embeddings(s, d), ivfIndexFor(s, d))),
+      Similarity.annTopKIvf(Tables.embeddings(s, d), Tiers.ivf(s, d))),
     // multi-probe over the SAME materialized index (shared base ⇒ the
     // build amortizes across q64/q74): own bucket + 8 Hamming-1
     // neighbors per query, DPP-pruned to the union of the probe lists
     // (≤ 72/256 partitions for this 8-query batch)
     "q74_ann_multiprobe" -> ((s, d) =>
-      Similarity.annTopKIvfMultiProbe(Tables.embeddings(s, d), ivfIndexFor(s, d))),
+      Similarity.annTopKIvfMultiProbe(Tables.embeddings(s, d), Tiers.ivf(s, d))),
     // custom physical operator (LogicalPlan+Strategy+SparkPlan): heap top-k
     "q56_topk_custom"      -> ((s, d) => {
       import org.apache.spark.sql.functions.col
@@ -204,7 +204,7 @@ object SparkEntry {
     // embedding semantic dedup end-to-end: near-dup pairs → connected
     // components → one canonical keeper per cluster, audit-style output
     "q79_semantic_dedup"   -> ((s, d) =>
-      Dedup.semanticDedupCached(Tables.embeddings(s, d), semCcFor(s, d),
+      Dedup.semanticDedupCached(Tables.embeddings(s, d), Tiers.scc(s, d),
         threshold = 0.3)),
     // corpus-wide boilerplate mining: top n-grams by document frequency
     "q80_boilerplate_ngrams" -> ((s, d) =>
@@ -287,7 +287,7 @@ object SparkEntry {
     "q103_length_histogram" -> ((s, d) => TrainingData.lengthHistogram(Tables.documents(s, d))),
     // dedup-aggressiveness audit: near-dup cluster size distribution
     "q104_cluster_sizes"   -> ((s, d) =>
-      Dedup.clusterSizeDistributionCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.clusterSizeDistributionCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // skew audit: top-k hottest keys with corpus share, via TakeOrdered
     "q105_hot_keys"        -> ((s, d) => Aggregates.hotKeys(Tables.events(s, d), "user_id")),
     // per-source stage-attrition funnel (gate → exact dedup →
@@ -355,14 +355,14 @@ object SparkEntry {
     // edit-distance fuzzy near-dup pairs (length-band blocked,
     // threshold levenshtein verify on a bounded prefix)
     "q119_fuzzy_dedup"     -> ((s, d) =>
-      Dedup.fuzzyDupPairsCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.fuzzyDupPairsCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // source-priority paragraph dedup: trusted-tier keeper per
     // duplicated paragraph fingerprint
     "q120_priority_dedup"  -> ((s, d) => Dedup.priorityDedup(Tables.documents(s, d))),
     // char-bigram LM likelihood / perplexity gibberish screen
     "q121_bigram_lm"       -> ((s, d) =>
       TextAnalysis.bigramLmScoreCached(Tables.documents(s, d),
-        bigramLmFor(s, d))),
+        Tiers.blm(s, d))),
     // character-weighted median document length per source
     "q122_weighted_median" -> ((s, d) => TrainingData.weightedMedianLength(Tables.documents(s, d))),
     // exact rolling 7-day active users via presence-pair fan-out
@@ -381,7 +381,7 @@ object SparkEntry {
     "q129_type_entropy"    -> ((s, d) => RobustStats.eventTypeEntropy(Tables.events(s, d))),
     // PMI collocations over the top-50 vocabulary
     "q130_token_pmi"       -> ((s, d) =>
-      TextAnalysis.tokenPmiCached(Tables.documents(s, d), tokenTfFor(s, d))),
+      TextAnalysis.tokenPmiCached(Tables.documents(s, d), Tiers.tok(s, d))),
     // per-user LOCF time-weighted average of the value signal
     "q131_time_weighted"   -> ((s, d) => EventAnalytics.timeWeightedAvg(Tables.events(s, d))),
     // Z-order clustering-key layout audit (part x supplier interleave)
@@ -392,7 +392,7 @@ object SparkEntry {
     "q134_countmin"        -> ((s, d) => Sketches.countMinHeavyHitters(Tables.events(s, d))),
     // EXACT Jaccard set-similarity self-join via prefix filtering
     "q135_prefix_jaccard"  -> ((s, d) =>
-      Dedup.prefixJaccardJoinCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.prefixJaccardJoinCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // PSI distribution drift of each source vs the corpus
     "q136_psi_drift"       -> ((s, d) => RobustStats.psiDrift(Tables.documents(s, d))),
     // TextRank keywords: PageRank over the token co-occurrence graph,
@@ -400,34 +400,34 @@ object SparkEntry {
     // snapshot from the materialized token-tf frame)
     "q137_textrank"        -> ((s, d) =>
       TextAnalysis.textRankMaterialized(Tables.documents(s, d),
-        textRankFor(s, d),
+        Tiers.tr(s, d),
         tf = Some(TextAnalysis.tokenTfCached(Tables.documents(s, d),
-          tokenTfFor(s, d))))),
+          Tiers.tok(s, d))))),
     // BM25 top-k retrieval: first 8 docs as queries, inverted-index probe
     "q138_bm25_topk"       -> ((s, d) =>
-      TextAnalysis.bm25TopKCached(Tables.documents(s, d), armsFor(s, d))),
+      TextAnalysis.bm25TopKCached(Tables.documents(s, d), Tiers.arm(s, d))),
     // inverted-index build: df/cf + heap-capped posting lists
     "q139_inverted_index"  -> ((s, d) =>
-      TextAnalysis.invertedIndexCached(Tables.documents(s, d), tokenTfFor(s, d))),
+      TextAnalysis.invertedIndexCached(Tables.documents(s, d), Tiers.tok(s, d))),
     // EXACT directed shingle-containment join (quote/wrapper detection)
     "q140_containment"     -> ((s, d) =>
-      Dedup.containmentJoinCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.containmentJoinCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // per-doc shingle novelty vs ingestion order (crawl freshness)
     "q141_novelty"         -> ((s, d) =>
-      Dedup.noveltyScoreCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.noveltyScoreCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // deterministic Lloyd's k-means (IVF coarse-quantizer training)
     "q142_kmeans"          -> ((s, d) =>
-      Similarity.kmeansCached(Tables.embeddings(s, d), kmCellsFor(s, d))),
+      Similarity.kmeansCached(Tables.embeddings(s, d), Tiers.km(s, d))),
     // hourly OHLC bars per event type (struct-ordered arg-min/max agg)
     "q143_ohlc_bars"       -> ((s, d) => EventAnalytics.ohlcBars(Tables.events(s, d))),
     // triangle census of the token co-occurrence graph
     "q144_triangles"       -> ((s, d) =>
-      TextAnalysis.tokenTrianglesCached(Tables.documents(s, d), tokenTfFor(s, d))),
+      TextAnalysis.tokenTrianglesCached(Tables.documents(s, d), Tiers.tok(s, d))),
     // fastText-style hashed linear classifier (map-only inference)
     "q145_hashed_classifier" -> ((s, d) => TextAnalysis.hashedClassifier(Tables.documents(s, d))),
     // OOV occurrence rate vs the corpus top-16 vocabulary head
     "q146_oov_rate"        -> ((s, d) =>
-      TextAnalysis.oovRateCached(Tables.documents(s, d), tokenTfFor(s, d))),
+      TextAnalysis.oovRateCached(Tables.documents(s, d), Tiers.tok(s, d))),
     // anchored power-sum moments (mergeable sufficient statistics)
     "q147_power_moments"   -> ((s, d) => RobustStats.powerMoments(Tables.events(s, d))),
     // per-dimension embedding health audit (dead dims, anisotropy)
@@ -440,14 +440,14 @@ object SparkEntry {
     "q151_corpus_report"   -> ((s, d) => TrainingData.corpusReport(Tables.documents(s, d))),
     // BM25 + hashed-dense reciprocal-rank fusion (hybrid retrieval)
     "q152_hybrid_rrf"      -> ((s, d) =>
-      TextAnalysis.hybridRrfTopKCached(Tables.documents(s, d), armsFor(s, d))),
+      TextAnalysis.hybridRrfTopKCached(Tables.documents(s, d), Tiers.arm(s, d))),
     // SCD Type-2 state history: validity intervals from the event feed
     "q153_scd_history"     -> ((s, d) => EventAnalytics.scdHistory(Tables.events(s, d))),
     // GROUPING SETS: both marginal breakdowns in one fact-table scan
     "q154_grouping_sets"   -> ((s, d) => Aggregates.marginalsGroupingSets(Tables.orders(s, d))),
     // SemDeDup: cluster-bounded semantic dedup over kmeans cells
     "q155_semdedup"        -> ((s, d) =>
-      Similarity.semDedupCached(Tables.embeddings(s, d), kmCellsFor(s, d))),
+      Similarity.semDedupCached(Tables.embeddings(s, d), Tiers.km(s, d))),
     // Heaps-law vocabulary growth over ingestion-order tranches
     "q156_vocab_growth"    -> ((s, d) => TextAnalysis.vocabGrowth(Tables.documents(s, d))),
     // leakage-safe content-keyed k-fold assignment + balance audit
@@ -484,16 +484,16 @@ object SparkEntry {
     "q172_ref_integrity"    -> ((s, d) => Joins.refIntegrityAudit(
       Tables.orders(s, d), Tables.customer(s, d), Tables.lineitem(s, d))),
     // schema-on-read JSON map mining over the open props column,
-    // served from the materialized parsed-props frame (propsFor)
+    // served from the materialized parsed-props frame (Tiers.props)
     "q173_props_profile"    -> ((s, d) =>
-      JsonRouting.propsProfileCached(Tables.events(s, d), propsFor(s, d))),
+      JsonRouting.propsProfileCached(Tables.events(s, d), Tiers.props(s, d))),
     // Dataset.intersect / except over two sources' fingerprint sets
     "q174_set_relations"    -> ((s, d) => SetOps.setRelations(Tables.documents(s, d))),
     // point-in-time SCD2 state lookup for purchase events
     "q175_scd_lookup"       -> ((s, d) => EventAnalytics.scdLookup(Tables.events(s, d))),
     // MOSS winnowing: window-min fingerprint selection + shared-pair report
     "q176_winnow_pairs"     -> ((s, d) =>
-      Dedup.winnowedPairsCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.winnowedPairsCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // CUSUM level-shift changepoint per event type, exact integer argmax
     "q177_cusum_changepoint" -> ((s, d) => EventAnalytics.cusumChangepoint(Tables.events(s, d))),
     // multi-touch attribution: dyadic time-decay credit, exactly summable
@@ -508,10 +508,10 @@ object SparkEntry {
     "q182_hill_tail"        -> ((s, d) => RobustStats.hillTailIndex(Tables.documents(s, d))),
     // longest shared verbatim run per LSH candidate pair (diagonal islands)
     "q183_shared_runs"      -> ((s, d) =>
-      Dedup.sharedRunLengthsCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.sharedRunLengthsCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // sorted-neighborhood (SNM) blocking, two passes + exact Jaccard verify
     "q184_snm_neardups"     -> ((s, d) =>
-      Dedup.snmNearDupsCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.snmNearDupsCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // order-free per-source dataset fingerprints (XOR of row hashes)
     "q185_source_fingerprints" -> ((s, d) => Aggregates.sourceFingerprints(Tables.documents(s, d))),
     // two-sided as-of: linear interpolation at probe times, LOCF/backfill edges
@@ -542,25 +542,25 @@ object SparkEntry {
     // codebooks — the 100×-compression tier IVF+PQ stacks on q64's
     // coarse index; every code exact-oracled (unrolled CTE chains)
     // (codes/books served from the materialized PQ index — one train
-    // per subspace per corpus snapshot, the ivfIndexFor discipline;
+    // per subspace per corpus snapshot, the IVF index discipline;
     // q192/q193/q194 all probe it)
     "q192_pq_codes"         -> ((s, d) =>
-      Similarity.pqCodesCached(Tables.embeddings(s, d), pqIndexFor(s, d))),
+      Similarity.pqCodesCached(Tables.embeddings(s, d), Tiers.pq(s, d))),
     // PQ ADC top-k: per-subspace LUT distances summed in integer
     // micro-units — probe-time scan touches codes, never vectors
     "q193_pq_ann"           -> ((s, d) =>
-      Similarity.pqAnnCached(Tables.embeddings(s, d), pqIndexFor(s, d))),
+      Similarity.pqAnnCached(Tables.embeddings(s, d), Tiers.pq(s, d))),
     // PQ recall audit: |ADC top-k ∩ exact-L2 top-k| / k per panel
     // query — the m/k tuning gauge, itself oracle-exact
     "q194_pq_recall"        -> ((s, d) =>
-      Similarity.pqRecallCached(Tables.embeddings(s, d), pqIndexFor(s, d))),
+      Similarity.pqRecallCached(Tables.embeddings(s, d), Tiers.pq(s, d))),
     // per-type OLS drift line over quantized daily means — slope /
     // intercept / r², integer sufficient statistics, oracle-exact
     "q195_ols_trend"        -> ((s, d) => RobustStats.dailyOlsTrend(Tables.events(s, d))),
     // positional-postings phrase search: top trigram phrases with
     // df/occurrences and TopKPerKey-capped top documents
     "q196_phrase_search"    -> ((s, d) =>
-      TextAnalysis.phraseSearchCached(Tables.documents(s, d), phraseIdxFor(s, d))),
+      TextAnalysis.phraseSearchCached(Tables.documents(s, d), Tiers.post(s, d))),
     // matryoshka truncation sweep: prefix-dim top-k recall vs the
     // full-dim ground truth — the two-stage ANN cost-lever audit
     "q197_truncation_recall" -> ((s, d) => Similarity.truncationRecallSweep(Tables.embeddings(s, d))),
@@ -571,7 +571,7 @@ object SparkEntry {
     // exact Jaccard on the CASCADE's verified pair frame (the pairs
     // the pipeline operates on, served from the materialized cascade)
     "q199_minhash_calibration" -> ((s, d) =>
-      Dedup.minhashCalibrationCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.minhashCalibrationCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // native greedy subword segmentation (maximal munch, fixed
     // vocab): per-doc token counts + fertility, exact-oracled via a
     // DuckDB recursive CTE running the identical recurrence
@@ -601,28 +601,28 @@ object SparkEntry {
     // centroid-based silhouette over the deterministic k-means cells:
     // the O(n·k) cluster-separation audit for IVF/SemDeDup health
     "q208_silhouette"       -> ((s, d) =>
-      Similarity.simplifiedSilhouetteCached(Tables.embeddings(s, d), kmCellsFor(s, d))),
+      Similarity.simplifiedSilhouetteCached(Tables.embeddings(s, d), Tiers.km(s, d))),
     // repeated-substring excision (Lee et al.): cut >= minRun-token
     // runs that appear verbatim in more than one document
     "q209_excise_runs"      -> ((s, d) => Dedup.exciseSharedRuns(Tables.documents(s, d))),
     // perceptual average-hash over the binary payloads (sampled-byte
     // thumbnail stand-in; exact-integer threshold bits)
     "q210_image_ahash"      -> ((s, d) =>
-      Multimodal.imageAHashCached(Tables.documents(s, d), ahashFor(s, d))),
+      Multimodal.imageAHashCached(Tables.documents(s, d), Tiers.ah(s, d))),
     // aHash near-dup pairs via 6-block pigeonhole banding + one
     // bit_count(xor) verify per candidate — image near-dup at scale
     "q211_ahash_pairs"      -> ((s, d) =>
-      Multimodal.ahashPairsCached(Tables.documents(s, d), ahashFor(s, d))),
+      Multimodal.ahashPairsCached(Tables.documents(s, d), Tiers.ah(s, d))),
     // golden-record survivorship over the cascade's CC labels:
     // longest-text-wins master row + provenance breadth per cluster,
     // probing the one materialized LSH → verify → CC build
     "q212_golden_record"    -> ((s, d) =>
-      Dedup.goldenRecordsCached(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.goldenRecordsCached(Tables.documents(s, d), Tiers.cc(s, d))),
     // rank-biased overlap (p = 1/2, depth 10) between the BM25 and
     // raw tf·idf rankings — exact-integer suffix weights, one
     // equi-join per query instead of a depth loop
     "q213_rbo_rankings"     -> ((s, d) =>
-      TextAnalysis.rboRankingsCached(Tables.documents(s, d), armsFor(s, d))),
+      TextAnalysis.rboRankingsCached(Tables.documents(s, d), Tiers.arm(s, d))),
     // CDC log compaction: I/U/D ops per entity → last-writer-wins
     // final state with tombstones — the SCD1 MERGE maintenance pass
     "q214_cdc_compact"      -> ((s, d) => EventAnalytics.cdcCompact(Tables.events(s, d))),
@@ -652,7 +652,7 @@ object SparkEntry {
     // via TakeOrdered — the what-took-off screen, probing the
     // materialized parsed-props frame (no per-row JSON in the probe)
     "q222_trending_keys"    -> ((s, d) =>
-      EventAnalytics.trendingKeysCached(Tables.events(s, d), propsFor(s, d))),
+      EventAnalytics.trendingKeysCached(Tables.events(s, d), Tiers.props(s, d))),
     // lead-lag cross-correlation of daily purchase vs error volumes
     // over the zero-filled calendar — q161's bivariate sibling
     "q223_cross_correlation" -> ((s, d) => EventAnalytics.crossCorrelation(Tables.events(s, d))),
@@ -677,7 +677,7 @@ object SparkEntry {
     // consumer of the one materialized cascade build)
     "q229_dedup_agreement"  -> ((s, d) =>
       Dedup.dedupFamilyAgreementCached(Tables.documents(s, d),
-        ccCascadeFor(s, d), simhashFor(s, d))),
+        Tiers.cc(s, d), Tiers.sh(s, d))),
     // inter-arrival SLO tail report: p50/p90/p99 gap per type over
     // the q164 per-(user, type) gap stream
     "q230_latency_slo"      -> ((s, d) => EventAnalytics.latencySlo(Tables.events(s, d))),
@@ -694,7 +694,7 @@ object SparkEntry {
     // + pairs-per-kdoc density off the SAME functions the family
     // queries run — the driver-checkable "no quadratic blowup" row set
     "q234_scaling_audit"    -> ((s, d) =>
-      Dedup.scalingAudit(Tables.documents(s, d), ccCascadeFor(s, d), simhashFor(s, d))),
+      Dedup.scalingAudit(Tables.documents(s, d), Tiers.cc(s, d), Tiers.sh(s, d))),
     // multi-iteration BPE trainer: k merge-adopt-resegment steps over
     // the distinct-word frame; oracle unrolls the loop as chained
     // non-recursive CTEs
@@ -713,14 +713,14 @@ object SparkEntry {
     // relevance band — integer-weight DCG, closed-form IDCG, one
     // closing divide (the q213 discipline)
     "q237_retrieval_quality" -> ((s, d) =>
-      TextAnalysis.retrievalQualityCached(Tables.documents(s, d), armsFor(s, d))),
+      TextAnalysis.retrievalQualityCached(Tables.documents(s, d), Tiers.arm(s, d))),
     // eval-side contamination provenance: per eval doc, hit count,
     // compromised count, and the worst offender — q65's question
     // transposed to the benchmark owner's side
     "q238_contam_provenance" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       TrainingData.contaminationProvenance(docs,
-        shingles = Some(Dedup.shingleDocsCached(docs, ccCascadeFor(s, d))))
+        shingles = Some(Dedup.shingleDocsCached(docs, Tiers.cc(s, d))))
     }),
     // video keyframe near-dup: per-frame content fingerprints +
     // heap-capped inverted-index co-occurrence — q211's pair tier
@@ -731,7 +731,7 @@ object SparkEntry {
     // large cluster), exact mean quality + Gopher pass rate — the
     // "are dups low-quality" folklore, measured off the cached labels
     "q240_dup_quality"      -> ((s, d) =>
-      Dedup.dupQualityInteraction(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.dupQualityInteraction(Tables.documents(s, d), Tiers.cc(s, d))),
     // Mann-Whitney U on the q117 bin grid: exact 2U/tie integers from
     // per-bin counts, one float z at the close — no global rank sort
     "q241_mann_whitney"     -> ((s, d) =>
@@ -748,16 +748,16 @@ object SparkEntry {
     // ranking — rank-placement quality, q93's set-recall companion;
     // the exact graded ground truth is a materialized frame
     "q244_ann_quality"      -> ((s, d) =>
-      Similarity.annQuality(Tables.embeddings(s, d), ivfIndexFor(s, d),
-        gtDir = Some(annGtFor(s, d)))),
+      Similarity.annQuality(Tables.embeddings(s, d), Tiers.ivf(s, d),
+        gtDir = Some(Tiers.gt(s, d)))),
     // per-cluster cohesion audit: edge density + min/mean verified
     // jaccard — the chain-merge diagnostic behind cluster-canonical
     // cleaning, off the materialized cascade frames
     "q245_cluster_cohesion" -> ((s, d) =>
-      Dedup.clusterCohesion(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.clusterCohesion(Tables.documents(s, d), Tiers.cc(s, d))),
     // pairwise RBO matrix across all three materialized retrieval arms
     "q246_arm_agreement"    -> ((s, d) =>
-      TextAnalysis.armAgreement(Tables.documents(s, d), armsFor(s, d))),
+      TextAnalysis.armAgreement(Tables.documents(s, d), Tiers.arm(s, d))),
     // data-budget epoching plan: temperature weights → allocation →
     // forced epoch count per source, over-epoch flag at 4 epochs
     "q247_data_budget"      -> ((s, d) =>
@@ -765,11 +765,11 @@ object SparkEntry {
     // hot-block audit for the aHash pair family: per-bucket candidate
     // volume + share — the find half of the q105→q108 skew pair
     "q248_ahash_hot_blocks" -> ((s, d) =>
-      Multimodal.ahashHotBlocksCached(Tables.documents(s, d), ahashFor(s, d))),
+      Multimodal.ahashHotBlocksCached(Tables.documents(s, d), Tiers.ah(s, d))),
     // q102's provenance matrix at the NEAR-dup tier, off the cached
     // cluster labels: who paraphrases whom
     "q249_neardup_sources"  -> ((s, d) =>
-      Dedup.nearDupSourceMatrix(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.nearDupSourceMatrix(Tables.documents(s, d), Tiers.cc(s, d))),
     // q247's budget plan ACTED ON: per-(source, epoch) docs/tokens of
     // the epoch-expanded corpus — full passes + a deterministic
     // hash-drawn fractional epoch, map-only (no per-source window)
@@ -778,11 +778,11 @@ object SparkEntry {
     // q245's cohesion audit ACTED ON: canonical cleaning that spares
     // suspected chain-merge clusters (density below the floor)
     "q251_guarded_clean"    -> ((s, d) =>
-      Dedup.guardedCanonicalClean(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.guardedCanonicalClean(Tables.documents(s, d), Tiers.cc(s, d))),
     // q251's action column closed as the review-facing delta: per
     // source, docs the clean drops vs docs the cohesion guard spared
     "q252_guard_delta"      -> ((s, d) =>
-      Dedup.guardDelta(Tables.documents(s, d), ccCascadeFor(s, d))),
+      Dedup.guardDelta(Tables.documents(s, d), Tiers.cc(s, d))),
     // q247's over-epoch flag ACTED ON: per-source epoch cap + one
     // pro-rata redistribution round, spill reported
     "q253_capped_budget"    -> ((s, d) =>
@@ -811,7 +811,7 @@ object SparkEntry {
     "q258_leak_typology"    -> ((s, d) => {
       val docs = Tables.documents(s, d)
       Similarity.leakTypology(Tables.embeddings(s, d), docs,
-        shingles = Some(Dedup.shingleDocsCached(docs, ccCascadeFor(s, d))))
+        shingles = Some(Dedup.shingleDocsCached(docs, Tiers.cc(s, d))))
     }),
     // source-mixture drift between the q90 snapshot pair: share
     // deltas in exact bp — the silent reweighting a crawl refresh
@@ -831,26 +831,26 @@ object SparkEntry {
     "q260_leak_drop_ids"    -> ((s, d) => {
       val docs = Tables.documents(s, d)
       Similarity.leakTypologyDropIdsQ(Tables.embeddings(s, d), docs,
-        shingles = Some(Dedup.shingleDocsCached(docs, ccCascadeFor(s, d))))
+        shingles = Some(Dedup.shingleDocsCached(docs, Tiers.cc(s, d))))
     }),
     // near-dup-leakage-safe split: the md5 draw keyed on the CC
     // cluster so a 95%-identical twin can never straddle train/test
     "q261_cluster_safe_split" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       TrainingData.clusterSafeSplit(docs,
-        Dedup.dupClustersCached(docs, ccCascadeFor(s, d)))
+        Dedup.dupClustersCached(docs, Tiers.cc(s, d)))
     }),
     // the dedup threshold chosen on evidence: per candidate jaccard
     // cut, verified pairs firing + docs dropped + survivors
     "q262_threshold_sweep"  -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      Dedup.dedupThresholdSweep(docs, ccCascadeFor(s, d))
+      Dedup.dedupThresholdSweep(docs, Tiers.cc(s, d))
     }),
     // q262's embedding-side twin: the semantic τ knob swept against
     // the materialized cosine pair frame
     "q263_semantic_sweep"   -> ((s, d) =>
       Dedup.semanticThresholdSweep(Tables.embeddings(s, d),
-        semCcFor(s, d))),
+        Tiers.scc(s, d))),
     // incremental cascade append: the daily batch (doc_id % 10 == 7)
     // lands on yesterday's committed cascade without re-shingling the
     // corpus; reports the batch-attributable verified pairs out of
@@ -858,317 +858,52 @@ object SparkEntry {
     // other cascade consumer's oracle re-checks that contract)
     "q264_cascade_append"   -> ((s, d) =>
       Dedup.cascadeAppendNewPairs(Tables.documents(s, d),
-        ccOldCascadeFor(s, d), ccCascadeFor(s, d))),
+        Tiers.cco(s, d), Tiers.cc(s, d))),
     // q264's embedding twin: the daily vector batch lands on
     // yesterday's committed semcc frame bit-identical to a rebuild,
     // re-verifying only batch-touching pairs
     "q265_semcc_append"     -> ((s, d) =>
       Dedup.semanticAppendNewPairs(Tables.embeddings(s, d),
-        semCcOldFor(s, d), semCcFor(s, d))),
+        Tiers.scco(s, d), Tiers.scc(s, d))),
     // the PQ-index ingest path: the daily vector batch encodes
     // map-only against yesterday's FROZEN codebooks and lands as
     // delta files next to yesterday's codes (zero resident I/O);
     // reports the batch's codes read back from the appended address
     "q266_pq_append"        -> ((s, d) =>
       Similarity.pqAppendBatchCodes(Tables.embeddings(s, d),
-        pqOldIndexFor(s, d), pqAppIndexFor(s, d))),
+        Tiers.pqo(s, d), Tiers.pqapn(s, d))),
     // the byte-block-banded family's ingest path: the daily batch
     // hashes alone, collides against the union's block rows, and both
     // tiers land as linked base + batch delta into the address
     // q71/q229/q234 probe
     "q267_simhash_append"   -> ((s, d) =>
       Dedup.simhashAppendNewPairs(Tables.documents(s, d),
-        simhashOldFor(s, d), simhashFor(s, d))),
+        Tiers.sho(s, d), Tiers.sh(s, d))),
     // the delta-landing lifecycle's maintenance half: the main
     // cascade compacts once into right-sized files (the weekly
     // OPTIMIZE next to q264's daily append); per-tier row counts off
     // the compacted address prove the rewrite content-complete
     "q268_compact_tiers"    -> ((s, d) =>
       Dedup.cascadeCompactTierCounts(Tables.documents(s, d),
-        ccCascadeFor(s, d), ccCompactFor(s, d))),
+        Tiers.cc(s, d), Tiers.cccmp(s, d))),
     // the maintenance half closed over every materialized family:
     // SimHash, semantic-CC, PQ, and the bucket-partitioned IVF index
     // each compact into a cmp_ revision; one report reads all four
     "q269_compact_families" -> ((s, d) =>
       Dedup.familyCompactionReport(
         Tables.documents(s, d), Tables.embeddings(s, d),
-        simhashFor(s, d), simhashCmpFor(s, d),
-        semCcFor(s, d), semCcCmpFor(s, d),
-        pqIndexFor(s, d), pqCmpIndexFor(s, d),
-        ivfIndexFor(s, d), ivfCmpIndexFor(s, d))),
+        Tiers.sh(s, d), Tiers.shcmp(s, d),
+        Tiers.scc(s, d), Tiers.scccmp(s, d),
+        Tiers.pq(s, d), Tiers.pqcmp(s, d),
+        Tiers.ivf(s, d), Tiers.ivfcmp(s, d))),
     // the token family's ingest path — the simplest append instance
     // (pure per-document aggregate, map-side landing); the batch's
     // landed rows read back from the address q130/q137/q139/q144/q146
     // probe
     "q270_tokentf_append"   -> ((s, d) =>
       TextAnalysis.tokenTfAppendBatchRows(Tables.documents(s, d),
-        tokenTfOldFor(s, d), tokenTfFor(s, d)))
+        Tiers.toko(s, d), Tiers.tok(s, d)))
   )
-
-  /** Content-addressed home of the documents table's SimHash pair
-    * frame — the [[ccCascadeFor]] discipline; shared by q71/q229.
-    */
-  private[graft] def simhashFor(s: SparkSession, d: String): String =
-    Dedup.simhashDir(s, s"$d/documents.parquet", tmpBase(d, "sh"))
-
-  /** The YESTERDAY-corpus simhash frame (documents minus the
-    * `doc_id % 10 == 7` batch) that q267's append lands on —
-    * [[ccOldCascadeFor]]'s byte-block-banded twin, same
-    * slice-in-the-variant contract.
-    */
-  private[graft] def simhashOldFor(s: SparkSession, d: String): String =
-    Dedup.simhashDir(s, s"$d/documents.parquet", tmpBase(d, "sh"),
-      variant = "oldm10r7_")
-
-  /** Content-addressed IVF index location for the dataset at `d`.
-    * Per-dataset base: ivfIndexDir prunes superseded content hashes
-    * within it, so each corpus keeps exactly one live index. The base
-    * is keyed on a hash of the FULL dataset path (not just the
-    * basename): two datasets named e.g. sf0.1 under different parents
-    * must not share a base, or each probe would prune the other's
-    * live index (rebuild churn on every alternation). Shared by
-    * q64/q74 so the one build serves every index-backed ANN variant.
-    */
-  private[graft] def ivfIndexFor(s: SparkSession, d: String): String =
-    Similarity.ivfIndexDir(s, s"$d/embeddings.parquet", tmpBase(d, "ivf"))
-
-  /** Content-addressed home of the documents table's materialized
-    * dedup cascade (verified pairs + CC labels) — same base-keying
-    * rationale as [[ivfIndexFor]]. Shared by q33/q68/q72/q104 so the
-    * one LSH → verify → CC build serves pair reporting, cluster
-    * labeling, the size audit, and cluster-canonical cleaning.
-    */
-  /** tmpdir base for one testdata dir's artifacts of one family —
-    * shared by a family's main helper AND its variant twin, so a base
-    * rename can never silently split a frame from its variants (the
-    * pruning, pre-touch, and reuse assumptions all key on the two
-    * living in one base).
-    */
-  private def tmpBase(d: String, kind: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${kind}_${new java.io.File(d).getName}_$ph").getAbsolutePath
-  }
-
-  private[graft] def ccCascadeFor(s: SparkSession, d: String): String =
-    Dedup.cascadeDir(s, s"$d/documents.parquet", tmpBase(d, "cc"))
-
-  /** Content-addressed home of the YESTERDAY-corpus cascade
-    * (documents minus the `doc_id % 10 == 7` batch) that q264's
-    * incremental append lands on. Same base as [[ccCascadeFor]]; the
-    * `variant` keys the slice, because the content address signs the
-    * corpus FILES and both cascades read the same parquet. The
-    * variant string ENCODES the slice definition (mod 10, residue 7):
-    * changing the query's split without renaming the variant would
-    * reuse a stale frame built for the old slice — the same
-    * setting-in-the-prefix discipline as the threshold.
-    */
-  private[graft] def ccOldCascadeFor(s: SparkSession, d: String): String =
-    Dedup.cascadeDir(s, s"$d/documents.parquet", tmpBase(d, "cc"),
-      variant = "oldm10r7_")
-
-  /** The COMPACTED revision of [[ccCascadeFor]]'s cascade — q268's
-    * landing. Same base and content address, `cmp_` variant: the
-    * compacted tiers are content-row-equal but a different file
-    * layout, so they live as a sibling revision the content address
-    * prunes/rebuilds on the same corpus-change trigger as the main.
-    */
-  private[graft] def ccCompactFor(s: SparkSession, d: String): String =
-    Dedup.cascadeDir(s, s"$d/documents.parquet", tmpBase(d, "cc"),
-      variant = "cmp_")
-
-  /** q269's compacted revisions — [[ccCompactFor]]'s siblings for the
-    * other three materialized families (same base as each family's
-    * main address, `cmp_` variant). */
-  private[graft] def simhashCmpFor(s: SparkSession, d: String): String =
-    Dedup.simhashDir(s, s"$d/documents.parquet", tmpBase(d, "sh"),
-      variant = "cmp_")
-
-  private[graft] def semCcCmpFor(s: SparkSession, d: String): String =
-    Dedup.semCcDir(s, s"$d/embeddings.parquet", tmpBase(d, "scc"),
-      variant = "cmp_")
-
-  private[graft] def pqCmpIndexFor(s: SparkSession, d: String): String =
-    Similarity.pqIndexDir(s, s"$d/embeddings.parquet", tmpBase(d, "pq"),
-      variant = "cmp_")
-
-  private[graft] def ivfCmpIndexFor(s: SparkSession, d: String): String =
-    Similarity.ivfIndexDir(s, s"$d/embeddings.parquet", tmpBase(d, "ivf"),
-      variant = "cmp_")
-
-  /** Content-addressed home of the embeddings table's materialized
-    * embedding-CC label frame ([[Dedup.prebuildSemanticCc]]) — q79
-    * probes it instead of re-running the pointer-jumping CC loop (many
-    * small jobs, the suite's most burst-sensitive shape) per
-    * invocation; the [[ccCascadeFor]] discipline on the embedding side.
-    */
-  private[graft] def semCcFor(s: SparkSession, d: String): String =
-    Dedup.semCcDir(s, s"$d/embeddings.parquet", tmpBase(d, "scc"))
-
-  /** The YESTERDAY-corpus semcc frame (embeddings minus the
-    * `vec_id % 10 == 7` batch) that q265's semantic append lands on —
-    * [[ccOldCascadeFor]]'s embedding twin, with the same
-    * slice-in-the-variant contract (the committed frame has no roster
-    * of its corpus ids to validate against, so the variant string IS
-    * the slice's address — rename it when the split changes).
-    */
-  private[graft] def semCcOldFor(s: SparkSession, d: String): String =
-    Dedup.semCcDir(s, s"$d/embeddings.parquet", tmpBase(d, "scc"),
-      variant = "oldm10r7_")
-
-  /** Content-addressed home of the embeddings table's materialized PQ
-    * index (codes + codebooks) — the [[ivfIndexFor]] discipline;
-    * shared by q192/q193/q194.
-    */
-  private[graft] def pqIndexFor(s: SparkSession, d: String): String =
-    Similarity.pqIndexDir(s, s"$d/embeddings.parquet", tmpBase(d, "pq"))
-
-  /** The YESTERDAY-corpus PQ index (embeddings minus the
-    * `vec_id % 10 == 7` batch) that q266's append encodes against —
-    * [[semCcOldFor]]'s index-tier twin, same slice-in-the-variant
-    * contract. Frozen: the append never writes here.
-    */
-  private[graft] def pqOldIndexFor(s: SparkSession, d: String): String =
-    Similarity.pqIndexDir(s, s"$d/embeddings.parquet", tmpBase(d, "pq"),
-      variant = "oldm10r7_")
-
-  /** The APPENDED address q266 lands into: yesterday's books and
-    * codes hard-linked + the batch's code delta files — the union
-    * index under snapshot semantics (the old address stays exactly as
-    * signed).
-    */
-  private[graft] def pqAppIndexFor(s: SparkSession, d: String): String =
-    Similarity.pqIndexDir(s, s"$d/embeddings.parquet", tmpBase(d, "pq"),
-      variant = "apnm10r7_")
-
-  /** Content-addressed home of the events table's materialized
-    * parsed-props long frame — the [[ivfIndexFor]] discipline; shared
-    * by q173 (props profile) and q222 (trending keys), the only two
-    * consumers that parse the open JSON props column.
-    */
-  private[graft] def propsFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_props_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    graft.operators.JsonRouting.propsDir(s, s"$d/events.parquet", base)
-  }
-
-  /** Content-addressed home of the documents table's materialized
-    * token-tf frame ([[graft.operators.TextAnalysis.tokenTf]]) — the
-    * [[propsFor]] discipline applied to the token family; shared by
-    * q130/q137/q139/q144/q146 and the retrieval-arm builds.
-    */
-  private[graft] def tokenTfFor(s: SparkSession, d: String): String =
-    TextAnalysis.tokenTfDir(s, s"$d/documents.parquet", tmpBase(d, "tok"))
-
-  /** The YESTERDAY-corpus token-tf frame (documents minus the
-    * `doc_id % 10 == 7` batch) that q270's append lands on —
-    * [[ccOldCascadeFor]]'s token twin, same slice-in-the-variant
-    * contract. */
-  private[graft] def tokenTfOldFor(s: SparkSession, d: String): String =
-    TextAnalysis.tokenTfDir(s, s"$d/documents.parquet", tmpBase(d, "tok"),
-      variant = "oldm10r7_")
-
-  /** Content-addressed home of the documents table's materialized
-    * retrieval-arm rankings (+ graded relevance) — shared by
-    * q138/q152/q213/q237, which previously each re-ran one or both
-    * arms end to end.
-    */
-  private[graft] def armsFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_arms_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    TextAnalysis.retrievalArmsDir(s, s"$d/documents.parquet", base)
-  }
-
-  /** Content-addressed home of the documents table's materialized
-    * 48-bit aHash signature frame
-    * ([[graft.operators.Multimodal.prebuildAhashSignatures]]) — shared
-    * by q210/q211/q248.
-    */
-  private[graft] def ahashFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ah_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    Multimodal.ahashDir(s, s"$d/documents.parquet", base)
-  }
-
-  /** Content-addressed home of the embeddings table's materialized
-    * k-means cells ([[graft.operators.Similarity.prebuildKmeansCells]])
-    * — the train step runs once per corpus snapshot; q142 (labels),
-    * q155 (SemDeDup pairs), and q208 (silhouette) probe the one frame.
-    */
-  private[graft] def kmCellsFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_km_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    Similarity.kmCellsDir(s, s"$d/embeddings.parquet", base)
-  }
-
-  /** Content-addressed home of the documents table's materialized
-    * positional phrase index
-    * ([[graft.operators.TextAnalysis.prebuildPhraseIndex]]) — q196
-    * probes it instead of re-running the trigram adjacency self-join.
-    */
-  private[graft] def phraseIdxFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_post_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    TextAnalysis.phraseIndexDir(s, s"$d/documents.parquet", base)
-  }
-
-  /** Content-addressed home of the documents table's materialized
-    * converged TextRank frame
-    * ([[graft.operators.TextAnalysis.prebuildTextRank]]) — q137 probes
-    * it instead of re-running the 10 damped iterations per invocation.
-    */
-  private[graft] def textRankFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_tr_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    TextAnalysis.textRankDir(s, s"$d/documents.parquet", base)
-  }
-
-  /** Content-addressed home of the documents table's materialized
-    * bigram LM ([[graft.operators.TextAnalysis.prebuildBigramLm]]) —
-    * q121 scores against it instead of rebuilding the model per
-    * invocation (the model build was one of its two corpus scans).
-    */
-  private[graft] def bigramLmFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_blm_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    TextAnalysis.bigramLmDir(s, s"$d/documents.parquet", base)
-  }
-
-  /** Content-addressed home of the embeddings table's exact graded ANN
-    * ground truth ([[graft.operators.Similarity.prebuildAnnGroundTruth]])
-    * — the frozen audit panel q244 scores against.
-    */
-  private[graft] def annGtFor(s: SparkSession, d: String): String = {
-    val abs = new java.io.File(d).getAbsolutePath
-    val ph = java.security.MessageDigest.getInstance("MD5")
-      .digest(abs.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_anngt_${new java.io.File(d).getName}_$ph").getAbsolutePath
-    Similarity.annGtDir(s, s"$d/embeddings.parquet", base)
-  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

@@ -2,7 +2,7 @@ package graft.apps
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.engine.Tiers
 
 /** Isolated probe for the overlapped prebuilds (`fam_build_sec` /
   * `arm_build_sec`): wipe the family's tiers, time the prebuild,
@@ -22,10 +22,8 @@ object FamProbe {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = graft.engine.Tables.documents(spark, sfDir)
-    val dir =
-      if (family == "arm") SparkEntry.armsFor(spark, sfDir)
-      else SparkEntry.ccCascadeFor(spark, sfDir)
+    val tier = if (family == "arm") Tiers.arm else Tiers.fam
+    val dir = tier(spark, sfDir)
     val subs =
       if (family == "arm") Seq("bm25", "tfidf", "hybrid", "rel")
       else Seq("shsets", "pjpairs_t80", "cjpairs_t90", "snmpairs_t20",
@@ -44,12 +42,7 @@ object FamProbe {
       }
       val c0 = graft.Bench.processCpuNanos
       val t0 = System.nanoTime()
-      val built =
-        if (family == "arm") graft.operators.TextAnalysis
-          .prebuildRetrievalArms(docs, dir,
-            Some(graft.operators.TextAnalysis.tokenTfCached(docs,
-              SparkEntry.tokenTfFor(spark, sfDir))))
-        else graft.operators.Dedup.prebuildPairFamilies(docs, dir)
+      val built = tier.build(spark, sfDir)
       val wall = System.nanoTime() - t0
       val cores = (graft.Bench.processCpuNanos - c0).toDouble / wall
       println(f"FAMPROBE rep $i: ${wall / 1e9}%.2f s (built=$built, load $load%.1f, cores $cores%.1f)")

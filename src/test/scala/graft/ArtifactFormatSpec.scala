@@ -85,10 +85,13 @@ class ArtifactFormatSpec extends AnyFunSuite {
     val ob = Bench.obJson(worst, names.map(_ -> 99.9).toMap)
     assert(ob.length == 22 * 3 + 2, ob)
     // builds_sec at worst width (3-char cells; keys MUST track
-    // Bench's real list — a stale literal under-models)
-    val builds = Seq("ivf", "cc", "cco", "sh", "sho", "pq", "pqo", "fam",
+    // Bench's real list — a stale literal under-models, so the
+    // literal is checked against the registry-derived keys, in order)
+    val buildKeys = Seq("ivf", "cc", "cco", "sh", "sho", "pq", "pqo", "fam",
         "props", "gt", "ah", "tok", "arm", "km", "post", "tr", "blm",
         "scc", "scco", "touch")
+    assert(graft.engine.Tiers.built.map(_.key) :+ "touch" == buildKeys)
+    val builds = buildKeys
       .map(k => s""""$k":9.9""").mkString("{", ",", "}")
     // contention digit strings: one char per 10-query block (r18 —
     // the honest worst-width model no longer fits three 60-char

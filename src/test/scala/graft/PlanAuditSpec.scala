@@ -184,9 +184,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // NOT a third LSH → verify → CC rebuild. The Generate/Exchange-free
     // label scan is the 100 TB story — auditing cluster sizes reads
     // the (long, long) label frame, never re-shingles the corpus.
-    graft.operators.Dedup.prebuildCascade(
-      graft.engine.Tables.documents(spark, sfDir),
-      SparkEntry.ccCascadeFor(spark, sfDir))
+    graft.engine.Tiers.cc.build(spark, sfDir)
     for (q <- Seq("q32_minhash_pairs", "q33_near_dup", "q68_dup_clusters",
         "q104_cluster_sizes")) {
       val p = plan(q)
@@ -201,9 +199,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // materialized shingle-set frame — none may re-shingle. q176/q184
     // joined the materialized-pair discipline this round: probes must
     // be frame scans too.
-    graft.operators.Dedup.prebuildPairFamilies(
-      graft.engine.Tables.documents(spark, sfDir),
-      SparkEntry.ccCascadeFor(spark, sfDir))
+    graft.engine.Tiers.fam.build(spark, sfDir)
     for (q <- Seq("q55_cleaning_pipeline", "q72_cleaning_clustered",
         "q135_prefix_jaccard", "q140_containment", "q141_novelty",
         "q176_winnow_pairs", "q184_snm_neardups")) {
@@ -219,9 +215,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // timestamp truncation live ONLY in the one-off build. This is the
     // structural close of the r10/r11 q222 driver-run pathology: the
     // expensive expression no longer exists in the probe plan.
-    graft.operators.JsonRouting.prebuildPropsLong(
-      graft.engine.Tables.events(spark, sfDir),
-      SparkEntry.propsFor(spark, sfDir))
+    graft.engine.Tiers.props.build(spark, sfDir)
     for (q <- Seq("q173_props_profile", "q222_trending_keys")) {
       val p = plan(q)
       assert(!p.contains("from_json") && !p.contains("get_json_object"),
@@ -238,9 +232,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // narrow parquet probes — the text explode lives ONLY in the
     // one-off build (q144 keeps one bounded Generate: the
     // vocab-bounded triangle explode, asserted separately)
-    graft.operators.TextAnalysis.prebuildTokenTf(
-      graft.engine.Tables.documents(spark, sfDir),
-      SparkEntry.tokenTfFor(spark, sfDir))
+    graft.engine.Tiers.tok.build(spark, sfDir)
     for (q <- Seq("q130_token_pmi", "q137_textrank",
         "q139_inverted_index", "q146_oov_rate")) {
       val p = plan(q)
