@@ -125,7 +125,7 @@ object Bench {
         if (f.length > 5 && physDev.matches(f(2))) acc + f(5).toLong
         else acc
       } finally src.close()
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   private[graft] def jsonStr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -421,7 +421,7 @@ object Bench {
     // the recorded wall-clock of the warm-up itself is direct evidence
     // when the box was loaded before the first query ever started.
     try spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => System.err.println(s"WARN: SQL warm-up failed: $e") }
     // mlwarm_sec times the MLlib micro-fit alone (comparable across
     // rounds — the SQL/JIT warm-up above is excluded, as before)
     val mlWarmT0 = System.nanoTime()
@@ -444,7 +444,7 @@ object Bench {
       // from the same zero-state every measured query gets
       dropAllState()
       (System.nanoTime() - mlWarmT0) / 1e9
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
     // pre-build every registered tier (content-addressed ⇒ legitimate
     // amortization: production builds once per corpus snapshot and
     // probes many times), in registry order. Each reads 0 when an
@@ -502,7 +502,7 @@ object Bench {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime()
       try { f; (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      catch { case NonFatal(_) => -1.0 }
     }
     def calScan(): Double = timed {
       graft.operators.Projections
@@ -580,7 +580,7 @@ object Bench {
       val c0 = processCpuNanos
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
       }
       val wall = System.nanoTime() - t0
@@ -745,7 +745,8 @@ object Bench {
     // stop() guarded: a broken shutdown path (the degraded environments
     // everything above defends against) must never cost the artifact
     // lines — they are the run's entire record
-    try spark.stop() catch { case _: Throwable => () }
+    try spark.stop()
+    catch { case NonFatal(e) => System.err.println(s"WARN: spark.stop() failed: $e") }
     // error DETAILS go on their own line BEFORE the main one so they
     // can never push the main line's front out of the 2000-char
     // artifact window; the main line carries only the failure count

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graft.DirectParquet
+import org.apache.commons.io.FileUtils
 
 import graft.operators.JsonRouting
 
@@ -16,7 +18,9 @@ import graft.operators.JsonRouting
   * projection parses each payload once and runs one task per source
   * partition, so a micro-batch is one wave of tasks and
   * [[exactlyOnceSink]] commits at most one file per partition per
-  * epoch.
+  * epoch. Those tasks write the epoch's Parquet files themselves,
+  * straight into a staging dir, and one directory rename commits the
+  * epoch ([[writeEpochOnce]]).
   *
   * The Kafka connector jar is not in this container, so sources are
   * file/rate/memory (the operator graph is IDENTICAL — Structured
@@ -68,14 +72,18 @@ object StreamPipeline {
   /** The idempotent epoch write at the heart of [[exactlyOnceSink]],
     * exposed for direct testing (a spec can hand it the same epoch
     * twice — something a live query only does across a crash).
-    * Write-audit-publish:
+    * Write-audit-publish, with the rename as the only commit:
     *   1. a re-delivered epoch whose commit dir already exists is
     *      SKIPPED (returns false) — the only branch that makes
     *      at-least-once delivery exactly-once output;
-    *   2. the batch is staged under a dot-prefixed dir (invisible to
-    *      parquet readers listing `outDir`) in overwrite mode, so a
-    *      torn previous attempt — crash mid-write, before commit — is
-    *      clobbered, never merged;
+    *   2. a torn previous attempt's staging dir (crash mid-write,
+    *      before commit) is deleted, never merged, and the batch's
+    *      tasks write their Parquet files straight into a fresh
+    *      dot-prefixed staging dir (invisible to parquet readers
+    *      listing `outDir`) via [[DirectParquet]]: one file per
+    *      partition, no Hadoop commit protocol, no `_temporary`,
+    *      `_SUCCESS` or `.crc`. Any file no successful task reported
+    *      is deleted;
     *   3. one atomic directory rename to `epoch=<id>` is the commit
     *      point: readers see a committed epoch entirely or not at all,
     *      and get `epoch` back as a partition column for free.
@@ -84,9 +92,12 @@ object StreamPipeline {
     val commit = new java.io.File(outDir, s"epoch=$epochId")
     if (commit.exists()) return false
     val staging = new java.io.File(outDir, s".epoch-$epochId.staging")
-    batch.write.mode("overwrite").parquet(staging.toString)
+    FileUtils.deleteQuietly(staging)
+    java.nio.file.Files.createDirectories(staging.toPath)
+    val written = DirectParquet.write(batch, staging).toSet
+    staging.listFiles().filterNot(f => written(f.getName)).foreach(FileUtils.deleteQuietly)
     if (!staging.renameTo(commit)) {
-      org.apache.commons.io.FileUtils.deleteQuietly(staging)
+      FileUtils.deleteQuietly(staging)
       require(commit.exists(),
         s"epoch $epochId commit rename failed and no commit exists")
       return false

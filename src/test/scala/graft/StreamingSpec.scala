@@ -1169,6 +1169,101 @@ class StreamingSpec extends AnyFunSuite {
     assert(!staging.exists(), "staging dir consumed by the commit rename")
   }
 
+  /** Footer of one Parquet file: its key-value metadata, its Parquet
+    * schema and the codec of every column chunk. */
+  private def footer(f: java.io.File) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(f.toPath))
+    try {
+      val meta = r.getFooter.getFileMetaData
+      import scala.jdk.CollectionConverters._
+      (meta.getKeyValueMetaData.asScala.toMap, meta.getSchema,
+        r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+    } finally r.close()
+  }
+
+  private def partFiles(dir: java.io.File) =
+    dir.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+
+  test("writeEpochOnce writes what df.write.parquet writes: rows, schema, footer, codec; only part files") {
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    val df = spark.range(0, 40, 1, 4).selectExpr("id", "cast(id as int) as i",
+      "id * 1.5 as d", "cast(id / 4 as decimal(10, 2)) as dec",
+      "if(id % 3 = 0, null, concat('s', id)) as s", "timestamp_seconds(id) as ts",
+      "date_add(date'2026-01-01', cast(id as int)) as dt", "array(id, id + 1) as arr",
+      "named_struct('a', id, 'b', map('k', id)) as st")
+    assert(!df.schema("id").nullable && df.schema("s").nullable)
+    val outDir = java.nio.file.Files.createTempDirectory("graft-ew-out").toString
+    val sparkDir = java.nio.file.Files.createTempDirectory("graft-ew-spark").resolve("t").toFile
+    assert(StreamPipeline.writeEpochOnce(df, 3L, outDir))
+    df.write.parquet(sparkDir.toString)
+
+    val epoch = new java.io.File(outDir, "epoch=3")
+    assert(spark.read.parquet(epoch.toString).collect().sortBy(_.getLong(0)).toSeq ==
+      spark.read.parquet(sparkDir.toString).collect().sortBy(_.getLong(0)).toSeq)
+    val ours = partFiles(epoch).map(footer)
+    val theirs = partFiles(sparkDir).map(footer)
+    assert(ours.length == 4 && theirs.length == 4)
+    ours.zip(theirs).foreach { case ((kv, schema, codecs), (kv2, schema2, codecs2)) =>
+      assert(kv == kv2)
+      assert(org.apache.spark.sql.types.DataType.fromJson(kv(rowMeta)) == df.schema,
+        "the Spark schema footer keeps nullability")
+      assert(schema == schema2, "same Parquet logical types")
+      assert(codecs == codecs2 && codecs.nonEmpty)
+    }
+    assert(epoch.list().forall(n => n.startsWith("part-") && n.endsWith(".parquet")),
+      "no _temporary, _SUCCESS or .crc: " + epoch.list().mkString(", "))
+    assert(new java.io.File(outDir).list().toSet == Set("epoch=3"), "staging consumed")
+
+    // four empty partitions, and no partition at all (limit 0 plans an
+    // empty local scan)
+    Seq(df.filter("id < 0") -> 4L, df.limit(0) -> 5L).foreach { case (none, id) =>
+      assert(StreamPipeline.writeEpochOnce(none, id, outDir))
+      val dir = new java.io.File(outDir, s"epoch=$id")
+      assert(partFiles(dir).length == 1 && dir.list().length == 1,
+        "an empty epoch commits exactly one schema-only file")
+      assert(footer(partFiles(dir).head)._1(rowMeta) == ours.head._1(rowMeta))
+      assert(spark.read.parquet(dir.toString).count() == 0)
+    }
+  }
+
+  test("writeEpochOnce reports each part file's bytes and rows in the task output metrics") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val df = spark.range(0, 1000, 1, 3).selectExpr("id", "concat('payload-', id) as p")
+    val stages, ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes, records = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == "epoch-write"))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null) {
+          bytes.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+          records.addAndGet(e.taskMetrics.outputMetrics.recordsWritten)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    val outDir = java.nio.file.Files.createTempDirectory("graft-ewm-out").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("epoch-write", "epoch write")
+      try assert(StreamPipeline.writeEpochOnce(df, 0L, outDir)) finally sc.clearJobGroup()
+      // the bus delivers in order: once a later job's end is seen, so
+      // is every task end of the write
+      sc.setJobGroup("epoch-marker", "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val marker = sc.statusTracker.getJobIdsForGroup("epoch-marker").head
+      val deadline = System.currentTimeMillis() + 30000
+      while (!ended.contains(marker) && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      assert(ended.contains(marker), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    val onDisk = partFiles(new java.io.File(outDir, "epoch=0")).map(_.length).sum
+    assert(!stages.isEmpty && onDisk > 0)
+    assert(bytes.get == onDisk, s"metrics ${bytes.get} B, part files $onDisk B")
+    assert(records.get == 1000)
+  }
+
   test("dedupIngestSink: streamed epochs chain the simhash append; replay is a no-op; chain ≡ rebuild") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
