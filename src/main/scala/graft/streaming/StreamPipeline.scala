@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.graft.DirectParquet
+import org.apache.spark.sql.graft.{DirectParquet, LocalCheckpointFileManager}
 import org.apache.commons.io.FileUtils
 
 import graft.operators.JsonRouting
@@ -20,7 +20,10 @@ import graft.operators.JsonRouting
   * [[exactlyOnceSink]] commits at most one file per partition per
   * epoch. Those tasks write the epoch's Parquet files themselves,
   * straight into a staging dir, and one directory rename commits the
-  * epoch ([[writeEpochOnce]]).
+  * epoch ([[writeEpochOnce]]). The checkpointed sinks go through
+  * [[checkpointed]]: on a local checkpoint the offset and commit logs
+  * (and any state-store files) are written through java.nio by
+  * [[LocalCheckpointFileManager]], so a micro-batch forks no process.
   *
   * The Kafka connector jar is not in this container, so sources are
   * file/rate/memory (the operator graph is IDENTICAL — Structured
@@ -51,17 +54,37 @@ object StreamPipeline {
   def routedResponses(stream: DataFrame): DataFrame =
     JsonRouting.responseEnvelope(stream, ordered = false)
 
+  /** `df`'s stream writer checkpointed at `checkpointDir`, with the
+    * session's checkpoint files written by [[LocalCheckpointFileManager]]
+    * unless the session (or its Hadoop conf) already names a manager
+    * class. Spark reads that class from the session's Hadoop conf for
+    * every metadata log and state store, so the setting can only be
+    * session-wide; it is safe there because it changes how local files
+    * are written, not which checkpoint files, their bytes or their
+    * atomicity (only Hadoop's `.crc` sidecars are no longer written),
+    * and non-`file:` paths keep Spark's own manager. A user-set class
+    * is never overridden.
+    */
+  private def checkpointed(df: DataFrame, checkpointDir: String): DataStreamWriter[Row] = {
+    val key = LocalCheckpointFileManager.ConfKey
+    val spark = df.sparkSession
+    if (spark.conf.getOption(key).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(key) == null)
+      spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+    df.writeStream.option("checkpointLocation", checkpointDir)
+  }
+
   /** T3: append-mode sink with mandatory checkpoint (the reference's
     * exactly-once-ish contract, stream_inference.py:159-168).
     * Format "memory"/"console" for tests, "kafka"/"parquet" in a real
-    * deployment.
+    * deployment. The checkpoint logs are written through java.nio
+    * ([[checkpointed]]).
     */
   def appendSink(df: DataFrame, format: String, checkpointDir: String,
                  queryName: String): DataStreamWriter[Row] =
-    df.writeStream
+    checkpointed(df, checkpointDir)
       .format(format)
       .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
 
   /** K3: console debug sink (stream_inference.py:171-178). */
@@ -113,15 +136,17 @@ object StreamPipeline {
     * checkpoint commit, the SAME epoch is re-delivered on restart.
     * [[writeEpochOnce]]'s epoch-dir commit protocol absorbs the
     * replay, so `outDir` holds each micro-batch's rows exactly once
-    * no matter how many times the epoch fires.
+    * no matter how many times the epoch fires. The offset log entry
+    * before each batch and the commit log entry after it are written
+    * through java.nio ([[checkpointed]]): a micro-batch forks no
+    * process, on the epoch write or on the logs.
     */
   def exactlyOnceSink(df: DataFrame, outDir: String,
                       checkpointDir: String): DataStreamWriter[Row] = {
     val fn: (org.apache.spark.sql.Dataset[Row], Long) => Unit =
       (b, id) => { writeEpochOnce(b, id, outDir); () }
-    df.writeStream
+    checkpointed(df, checkpointDir)
       .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
       .foreachBatch(fn)
   }
 
@@ -418,11 +443,12 @@ object StreamPipeline {
     * without a native streaming connector (JDBC, multi-table fan-out,
     * idempotent-by-batch-id upserts). The batch id is stable across
     * retries, which is what makes exactly-once writes implementable.
+    * The checkpoint logs are written through java.nio
+    * ([[checkpointed]]).
     */
   def foreachBatchSink(df: DataFrame, checkpointDir: String)(
       write: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
+    checkpointed(df, checkpointDir)
       .outputMode(OutputMode.Append)
       .foreachBatch(write)
 
