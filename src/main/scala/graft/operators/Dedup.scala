@@ -433,6 +433,10 @@ object Dedup {
     * omitted). Non-convergence at the cap throws rather than emitting
     * non-canonical labels.
     *
+    * A small graph skips the loop: [[dupClustersFromPairs]] labels a
+    * graph of at most [[DriverEdges]] edges on the driver with a
+    * union-find instead (the same frame, row for row).
+    *
     * `checkpointDir`: None (default) truncates per-round lineage with
     * `localCheckpoint` — blocks live on executors, fast, right for
     * single-box and small-cluster runs; Some(dir) switches to RELIABLE
@@ -451,7 +455,9 @@ object Dedup {
     * directory — bounded per run, unbounded across runs — so a
     * recurring pipeline should point each run at a run-scoped
     * subdirectory and delete it after materializing the result
-    * (sinking the returned frame consumes the last checkpoint).
+    * (sinking the returned frame consumes the last checkpoint). A
+    * call with a `checkpointDir` always runs the loop, whatever the
+    * graph's size: the caller asked for rounds on the cluster FS.
     */
   def dupClusters(docs: DataFrame, threshold: Double = 0.2, bands: Int = 4,
                   maxBucketSize: Option[Int] = None,
@@ -467,12 +473,132 @@ object Dedup {
     * cleaning (see [[cleaningPipelineClustered]]'s `pairs` parameter).
     * `pairs` must have (id_a, id_b) columns; direction is irrelevant
     * (edges are symmetrized here).
+    *
+    * Two paths, one result. A graph of at most [[DriverEdges]] edges
+    * is labeled on the driver ([[driverClusters]]): one bounded collect
+    * and a union-find, instead of the loop's jobs in every round.
+    * Every larger graph, and every call with a `checkpointDir` (the
+    * caller asked for checkpointed rounds), takes the distributed loop
+    * ([[hashMinClusters]]). Both return the same frame: columns, id
+    * type, nullability and rows.
     */
   def dupClustersFromPairs(verifiedPairs: DataFrame,
                            maxIterations: Int = 50,
-                           checkpointDir: Option[String] = None): DataFrame = {
+                           checkpointDir: Option[String] = None): DataFrame =
+    clustersFromPairs(verifiedPairs, maxIterations, checkpointDir, DriverEdges)
+
+  /** The most edges [[dupClustersFromPairs]] labels on the driver. The
+    * choice depends on the edge count alone, not on a session option.
+    * The bound comes from driver memory, not speed. Measured with
+    * [[graft.apps.CcSizeProbe]] on a 4-core machine (local[4]), the
+    * driver path beat the loop at every size
+    * measured, 10k to 1M edges, by 4 to 8 times, so the speed
+    * crossover lies above 1M. But the path holds the collected rows,
+    * then the result's rows, on the driver. The smallest heap a run
+    * completed in was at most 160 MB at 1k edges, 320 MB at 200k
+    * (224 MB failed) and 900 MB at 1M (640 MB failed). 200k keeps the
+    * path's share of Spark's default 1 GB driver heap small.
+    */
+  private[graft] val DriverEdges = 200000
+
+  /** [[dupClustersFromPairs]] with the driver path's edge bound as a
+    * parameter, so a spec can send a small fixture either way. */
+  private[graft] def clustersFromPairs(verifiedPairs: DataFrame, maxIterations: Int,
+                                       checkpointDir: Option[String],
+                                       driverEdges: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val pairs = verifiedPairs.select("id_a", "id_b")
+    if (checkpointDir.nonEmpty) hashMinClusters(pairs, maxIterations, checkpointDir)
+    else {
+      // the probe and (on a large graph) the loop read the same cached
+      // pairs, so the near-dup cascade behind them runs once either way;
+      // a frame the caller already cached stays cached
+      val ours = pairs.storageLevel == StorageLevel.NONE
+      val cached = if (ours) pairs.persist(StorageLevel.MEMORY_AND_DISK) else pairs
+      try driverClusters(cached, driverEdges)
+        .getOrElse(hashMinClusters(cached, maxIterations, None))
+      finally if (ours) cached.unpersist(blocking = false)
+    }
+  }
+
+  /** [[dupClustersFromPairs]]' driver path, or None when the graph has
+    * more than `n` edges. Collects at most `n + 1` edges, flattens them
+    * into one array of primitive longs and unions their endpoints; the
+    * root of a set is always its smaller id, so every node's root is
+    * its component's minimum, exactly the `cluster_id` the HashMin
+    * loop converges to. The frame is built with the loop's schema:
+    * the input's id type (INT or BIGINT, both ends alike), `doc_id`
+    * nullable iff either id column is, `cluster_id` nullable (a `min`).
+    * Any other id type, or a pair with a null id (whose label the
+    * loop decides by its own join semantics), returns None.
+    */
+  private def driverClusters(pairs: DataFrame, n: Int): Option[DataFrame] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+    val (a, b) = (pairs.schema("id_a"), pairs.schema("id_b"))
+    val idType = a.dataType
+    if (b.dataType != idType || (idType != IntegerType && idType != LongType)) return None
+    val ends = {
+      val rows = pairs.limit(n + 1).collect()
+      if (rows.length > n || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+      val out = new Array[Long](2 * rows.length)
+      var i = 0
+      while (i < out.length) {
+        val r = rows(i / 2)
+        out(i) = if (idType == IntegerType) r.getInt(i % 2) else r.getLong(i % 2)
+        i += 1
+      }
+      out
+    }
+    val (nodes, roots) = componentMins(ends)
+    val box: Long => Any = if (idType == IntegerType) _.toInt else identity
+    val schema = StructType(Seq(
+      StructField("doc_id", idType, a.nullable || b.nullable, a.metadata),
+      StructField("cluster_id", idType, nullable = true)))
+    // a local collection becomes a LocalRelation, kept in this order
+    Some(pairs.sparkSession.createDataFrame(
+      nodes.indices.map(i => Row(box(nodes(i)), box(roots(i)))).asJava, schema))
+  }
+
+  /** Union-find over an edge list flattened as (a0, b0, a1, b1, …):
+    * the distinct endpoints in ascending order, and each one's
+    * component minimum. Nodes are indexed by rank, so "the smaller
+    * index is the root" keeps every root at its component's minimum;
+    * `find` halves paths as it walks. */
+  private def componentMins(ends: Array[Long]): (Array[Long], Array[Long]) = {
+    val nodes = {
+      val sorted = ends.clone()
+      java.util.Arrays.sort(sorted)
+      var k = 0
+      for (x <- sorted) if (k == 0 || sorted(k - 1) != x) { sorted(k) = x; k += 1 }
+      java.util.Arrays.copyOf(sorted, k)
+    }
+    val parent = Array.tabulate(nodes.length)(identity)
+    def find(start: Int): Int = {
+      var x = start
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(nodes, ends(e)))
+      val rb = find(java.util.Arrays.binarySearch(nodes, ends(e + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      e += 2
+    }
+    (nodes, nodes.indices.map(i => nodes(find(i))).toArray)
+  }
+
+  /** [[dupClustersFromPairs]]' distributed loop: HashMin with pointer
+    * jumping over (id_a, id_b) pairs ([[dupClusters]] describes the
+    * algorithm and the checkpoint arms). The symmetrized edge frame
+    * is persisted unless `pairs` already is: over cached pairs it is
+    * a narrow union of two cache scans, and a second cached copy
+    * would hold the pairs three times over. */
+  private[graft] def hashMinClusters(pairs: DataFrame, maxIterations: Int,
+                                     checkpointDir: Option[String]): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
     // lineage truncation (not mere persist) on the per-round frames: an
     // iterative plan that unions/joins its own previous round doubles
     // its LOGICAL plan every iteration, so analysis/optimization time
@@ -497,9 +623,12 @@ object Dedup {
       // unprotected until the next action.
       case None => df => df.localCheckpoint(eager = false)
     }
-    val edges = pairs.unionByName(
+    val edges = {
+      val both = pairs.unionByName(
         pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      if (pairs.storageLevel == StorageLevel.NONE) both.persist(StorageLevel.MEMORY_AND_DISK)
+      else both
+    }
     var labels = chk(edges.select(col("id_a").as("node")).distinct()
       .select(col("node"), col("node").as("cluster_id")))
     var changed = 1L

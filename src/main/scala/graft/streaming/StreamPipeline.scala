@@ -24,6 +24,7 @@ import graft.operators.JsonRouting
   * [[checkpointed]]: on a local checkpoint the offset and commit logs
   * (and any state-store files) are written through java.nio by
   * [[LocalCheckpointFileManager]], so a micro-batch forks no process.
+  * [[consoleSink]]'s temporary checkpoint is written the same way.
   *
   * The Kafka connector jar is not in this container, so sources are
   * file/rate/memory (the operator graph is IDENTICAL — Structured
@@ -66,12 +67,19 @@ object StreamPipeline {
     * is never overridden.
     */
   private def checkpointed(df: DataFrame, checkpointDir: String): DataStreamWriter[Row] = {
+    useLocalCheckpointFiles(df)
+    df.writeStream.option("checkpointLocation", checkpointDir)
+  }
+
+  /** Installs [[LocalCheckpointFileManager]] on `df`'s session unless
+    * the session or its Hadoop conf already names a manager class
+    * (see [[checkpointed]] for why session-wide is safe). */
+  private def useLocalCheckpointFiles(df: DataFrame): Unit = {
     val key = LocalCheckpointFileManager.ConfKey
     val spark = df.sparkSession
     if (spark.conf.getOption(key).isEmpty &&
         spark.sparkContext.hadoopConfiguration.get(key) == null)
       spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
-    df.writeStream.option("checkpointLocation", checkpointDir)
   }
 
   /** T3: append-mode sink with mandatory checkpoint (the reference's
@@ -87,10 +95,14 @@ object StreamPipeline {
       .queryName(queryName)
       .outputMode(OutputMode.Append)
 
-  /** K3: console debug sink (stream_inference.py:171-178). */
-  def consoleSink(df: DataFrame): DataStreamWriter[Row] =
+  /** K3: console debug sink (stream_inference.py:171-178). Its
+    * temporary checkpoint is written through java.nio too
+    * ([[useLocalCheckpointFiles]]). */
+  def consoleSink(df: DataFrame): DataStreamWriter[Row] = {
+    useLocalCheckpointFiles(df)
     df.writeStream.format("console").option("truncate", "false")
       .outputMode(OutputMode.Append)
+  }
 
   /** The idempotent epoch write at the heart of [[exactlyOnceSink]],
     * exposed for direct testing (a spec can hand it the same epoch

@@ -196,6 +196,22 @@ class CheckpointFileManagerSpec extends AnyFunSuite {
     }
   }
 
+  test("consoleSink installs the java.nio manager on a fresh session, never over a set class") {
+    def startConsole(session: org.apache.spark.sql.SparkSession): Unit = {
+      implicit val sqlCtx = session.sqlContext
+      val query = StreamPipeline.consoleSink(MemoryStream[Long].toDF()).start()
+      try query.processAllAvailable() finally query.stop()
+    }
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption(key).isEmpty)
+    startConsole(fresh)
+    assert(fresh.conf.get(key) == nio)
+    val userSet = spark.newSession()
+    userSet.conf.set(key, default)
+    startConsole(userSet)
+    assert(userSet.conf.get(key) == default)
+  }
+
   /** Runs `batches` through [[StreamPipeline.exactlyOnceSink]] on one
     * query: one micro-batch per batch, then stops. */
   private def runSink(mem: MemoryStream[(Long, String)], out: String, ckpt: String,
