@@ -2,7 +2,8 @@ package graft.apps
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.engine.{JsonlSink, ParquetSink}
 import graft.operators.{Dedup, TextAnalysis, TrainingData}
@@ -39,17 +40,29 @@ import graft.operators.{Dedup, TextAnalysis, TrainingData}
   * action per stage (five corpus passes) or `observe` metrics (a
   * CollectMetrics node races cold-cache consumers at multi-executor
   * scale and inflates); the audit numbers a production run records
-  * anyway. On exit the run
-  * clears EVERY cached frame in the session (`clearCacheOnExit`,
-  * default true): the interior stages (`cleaningPipelineClustered`,
-  * `evalDecontaminate`) persist corpus-sized frames whose handles
-  * they do not expose, so a targeted unpersist cannot reach them and
-  * a long-lived session invoking the pipeline repeatedly would
-  * accumulate them. The typology tier's `leakQuadrants` per-doc frame
-  * IS reachable (its registerCache hook feeds this run's extraCaches),
-  * so the clearCacheOnExit=false path releases it explicitly. Pass
-  * false only when the caller owns other live caches and accepts
-  * releasing the unregistered interior blocks lazily via GC.
+  * anyway.
+  *
+  * The pipeline's own stage frames (`gated`, `scrubbed`, `kept`, and
+  * the opt-in boilerplate input and semantic-dedup survivors) are
+  * checkpoints, not persisted frames: an eager `localCheckpoint`, or a
+  * reliable `checkpoint` into `checkpointDir` when one is given (a
+  * checkpoint dir the session already has wins), the two choices
+  * [[Dedup.dupClusters]] makes for its rounds. Each later stage then
+  * reads a one-node `Scan ExistingRDD`. A persisted frame would
+  * instead carry its whole cached plan, and these frames sit inside
+  * each other, so every action downstream would describe a plan that
+  * doubles with each level of nesting: AQE re-renders that
+  * description on the driver before each stage it submits.
+  *
+  * On exit the run releases what it made. The stage checkpoints'
+  * blocks are unpersisted in either mode (`catalog.clearCache()` does
+  * not reach them). `clearCacheOnExit = true` (the default) then
+  * clears EVERY cached frame in the session. `false` instead uncaches
+  * exactly the cached frames built on a stage checkpoint: the
+  * interior caches of `cleaningPipelineClustered`, `evalDecontaminate`
+  * and the opt-in tiers, whose handles those stages do not expose.
+  * The caller's own caches stay. Files of a reliable checkpoint are
+  * the caller's to delete, as for [[Dedup.dupClusters]].
   */
 object CorpusPipeline {
 
@@ -115,17 +128,21 @@ object CorpusPipeline {
     // has grams (so absence from the coverage frame cannot occur and
     // the semi-join is exact). Before dedup on purpose: boilerplate
     // docs are exactly the ones that explode LSH buckets.
-    val extraCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val gated = (maxBoilerplate match {
+    val cuts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def stage(df: DataFrame): DataFrame = {
+      val c = cut(df, checkpointDir)
+      cuts += c
+      c
+    }
+    val gated = stage(maxBoilerplate match {
       case Some(t) =>
-        val gg = gopherGated0.persist(StorageLevel.MEMORY_AND_DISK)
-        extraCaches += gg
+        val gg = stage(gopherGated0)
         gg.join(
           TextAnalysis.boilerplateCoverage(gg)
             .filter(col("boiler_fraction") <= t).select("doc_id"),
           Seq("doc_id"), "left_semi")
       case None => gopherGated0
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    })
     // cleaningPipelineClustered emits (doc_id, n_tokens, fingerprint);
     // the text rides back in via a doc_id equi-join against the gated
     // frame (cheap: survivors-sized build side, no text re-derivation)
@@ -137,9 +154,8 @@ object CorpusPipeline {
       cohesionFloorBp = cohesionFloorBp)
     val survivors0 = gated.join(
       cleaned.select("doc_id"), Seq("doc_id"), "left_semi")
-    val scrubbed = TextAnalysis.piiScrub(survivors0, ordered = false)
-      .select(col("doc_id"), col("clean_text").as("text"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val scrubbed = stage(TextAnalysis.piiScrub(survivors0, ordered = false)
+      .select(col("doc_id"), col("clean_text").as("text")))
     // the eval corpus is scrubbed IDENTICALLY before shingling: the
     // training side compares post-scrub text, so an unscrubbed eval
     // vocabulary would mismatch every shingle spanning a redacted
@@ -185,14 +201,12 @@ object CorpusPipeline {
     // Runs on the semDedup survivors so the cut is spent on docs
     // that can actually ship; like the semDedup tier, docs without
     // an embedding pass through untouched.
-    val kept = ((embeddings, evalEmbeddings) match {
+    val kept = stage((embeddings, evalEmbeddings) match {
       case (Some(emb), Some(evEmb)) =>
         // kept1's lineage (the whole semDedup tier) is read TWICE in
         // this branch — the embAlive semi-join and the final anti-join
-        // — so persist it for the branch; released with the run's
-        // other caches below
-        val k1 = kept1.persist(StorageLevel.MEMORY_AND_DISK)
-        extraCaches += k1
+        // — so it is a stage cut of its own
+        val k1 = stage(kept1)
         val embAlive = emb.join(
           k1.select(col("doc_id").as("vec_id")), Seq("vec_id"),
           "left_semi")
@@ -216,15 +230,14 @@ object CorpusPipeline {
         val drops = (if (typologyDecontam && !dropParaphrase)
           graft.operators.Similarity
             .leakTypologyDropIds(embAlive, evEmb, k1, scrubbedEval,
-              topK = decontamTopK, dropParaphrase = false,
-              registerCache = extraCaches += _)
+              topK = decontamTopK, dropParaphrase = false)
         else
           graft.operators.Similarity
             .decontamDropIds(embAlive, evEmb, decontamTopK))
           .select(col("vec_id").as("doc_id"))
         k1.join(drops, Seq("doc_id"), "left_anti")
       case _ => kept1
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    })
     // optional temperature reweighting of the FINAL corpus (rates are
     // computed on what survived cleaning, which is what trains): lang
     // rides back in on doc_id since the scrub projection dropped it
@@ -312,7 +325,7 @@ object CorpusPipeline {
     // actions: membership flags for every stage frame left-join the
     // id-only corpus scan, and a single count-the-flags aggregate
     // reads them all. Runs AFTER the writes, so the flag frames are
-    // already-cached (gated/kept) or cheap id projections — at 100 TB
+    // checkpointed (gated/kept) or cheap id projections — at 100 TB
     // this is one narrow pass, not five corpus re-scans. Deliberately
     // NOT `observe`/CollectMetrics: a metrics node under a cache that
     // two cold consumers race (multi-executor reality for every frame
@@ -335,12 +348,33 @@ object CorpusPipeline {
       .head()
     val report = Report(audit.getLong(0), audit.getLong(1),
       audit.getLong(2), audit.getLong(3), audit.getLong(4), audit.getLong(5))
-    if (clearCacheOnExit) docs.sparkSession.catalog.clearCache()
-    else {
-      (extraCaches.toSeq :+ gated :+ scrubbed :+ kept)
-        .foreach(_.unpersist(blocking = false))
-    }
+    release(cuts.toSeq, clearCacheOnExit)
     report
+  }
+
+  /** Materializes a stage frame and cuts its plan there: an eager
+    * `localCheckpoint`, or a reliable `checkpoint` when `checkpointDir`
+    * is given (a checkpoint dir the session already has is honored,
+    * not overridden). The result's plan is one `LogicalRDD`. */
+  private def cut(df: DataFrame, checkpointDir: Option[String]): DataFrame =
+    checkpointDir match {
+      case Some(dir) =>
+        val sc = df.sparkSession.sparkContext
+        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        df.checkpoint()
+      case None => df.localCheckpoint()
+    }
+
+  /** The run's exit: unpersists the stage checkpoints' RDDs, and
+    * clears the session's whole cache (`clearAll`) or only the cached
+    * frames whose plans read a stage checkpoint (a cascading uncache). */
+  private def release(cuts: Seq[DataFrame], clearAll: Boolean): Unit = {
+    val spark = castToImpl(cuts.head.sparkSession)
+    val plans = cuts.map(_.queryExecution.logical)
+    if (clearAll) spark.catalog.clearCache()
+    else plans.foreach(spark.sharedState.cacheManager.uncacheQuery(spark, _,
+      cascade = true, blocking = false))
+    plans.foreach { case r: LogicalRDD => r.rdd.unpersist(blocking = false) }
   }
 
   /** spark-submit entry: `runMain graft.apps.CorpusPipeline [sfDir outDir

@@ -522,25 +522,29 @@ object Dedup {
   }
 
   /** [[dupClustersFromPairs]]' driver path, or None when the graph has
-    * more than `n` edges. Collects at most `n + 1` edges, flattens them
-    * into one array of primitive longs and unions their endpoints; the
-    * root of a set is always its smaller id, so every node's root is
-    * its component's minimum, exactly the `cluster_id` the HashMin
-    * loop converges to. The frame is built with the loop's schema:
-    * the input's id type (INT or BIGINT, both ends alike), `doc_id`
-    * nullable iff either id column is, `cluster_id` nullable (a `min`).
-    * Any other id type, or a pair with a null id (whose label the
-    * loop decides by its own join semantics), returns None.
+    * more than `n` edges. Collects at most `n + 1` edges as internal
+    * rows, flattens them into one array of primitive longs and unions
+    * their endpoints; the root of a set is always its smaller id, so
+    * every node's root is its component's minimum, exactly the
+    * `cluster_id` the HashMin loop converges to. The result is a
+    * `LocalRelation` built straight from the node and root arrays,
+    * with the loop's schema: the input's id type (INT or BIGINT, both
+    * ends alike), `doc_id` nullable iff either id column is,
+    * `cluster_id` nullable (a `min`). Any other id type, or a pair with
+    * a null id (whose label the loop decides by its own join
+    * semantics), returns None.
     */
   private def driverClusters(pairs: DataFrame, n: Int): Option[DataFrame] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val (a, b) = (pairs.schema("id_a"), pairs.schema("id_b"))
     val idType = a.dataType
     if (b.dataType != idType || (idType != IntegerType && idType != LongType)) return None
     val ends = {
-      val rows = pairs.limit(n + 1).collect()
+      val rows = ColumnBridge.collectInternal(pairs.limit(n + 1))
       if (rows.length > n || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
       val out = new Array[Long](2 * rows.length)
       var i = 0
@@ -552,13 +556,16 @@ object Dedup {
       out
     }
     val (nodes, roots) = componentMins(ends)
-    val box: Long => Any = if (idType == IntegerType) _.toInt else identity
+    val row: Int => InternalRow =
+      if (idType == IntegerType) i => InternalRow(nodes(i).toInt, roots(i).toInt)
+      else i => InternalRow(nodes(i), roots(i))
     val schema = StructType(Seq(
       StructField("doc_id", idType, a.nullable || b.nullable, a.metadata),
       StructField("cluster_id", idType, nullable = true)))
-    // a local collection becomes a LocalRelation, kept in this order
-    Some(pairs.sparkSession.createDataFrame(
-      nodes.indices.map(i => Row(box(nodes(i)), box(roots(i)))).asJava, schema))
+    // a LocalRelation keeps its rows in this (doc_id) order
+    Some(ColumnBridge.ofRows(pairs.sparkSession, LocalRelation(
+      DataTypeUtils.toAttributes(schema),
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(Array.tabulate(nodes.length)(row)))))
   }
 
   /** Union-find over an edge list flattened as (a0, b0, a1, b1, …):

@@ -45,6 +45,15 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark), plan)
 
+  /** `df.collect()` without the external conversion: the rows the
+    * plan returns to the driver, run as one SQL execution like any
+    * other action. */
+  def collectInternal(df: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = org.apache.spark.sql.classic.ClassicConversions.castToImpl(df).queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
+
   /** The analyzed logical plan backing a DataFrame. */
   def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     org.apache.spark.sql.classic.ClassicConversions.castToImpl(df.sparkSession)
