@@ -2,130 +2,36 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.Tiers
 
-/** Per-round benchmark main (driver contract): runs every
-  * [[SparkEntry.queries]] entry against SPARK_GRAFT_SF_DIR and prints
-  * ONE JSON line `{"metric":"total","unit":"sec",…,"queries":…,…,
-  * "value":N,"sf":…}` — field order is SURVIVAL order (r17): the
-  * suite total and the adjudication dicts (slowest/retried/p2) trail
-  * the bulky per-query string, because the driver archives only the
-  * LAST 2000 chars and r16's total was truncated out of the artifact
-  * of record when `value` led the line.
+/** The suite benchmark main: times every [[SparkEntry.queries]] entry
+  * once against SPARK_GRAFT_SF_DIR, in numeric order, and prints ONE
+  * JSON line
+  * `{"metric":"total","unit":"sec","queries":…,"builds_sec":…,"value":N,"sf":…}`.
+  * Field order is SURVIVAL order: the run's artifact of record keeps
+  * only the LAST 2000 characters of its output, so the suite total
+  * trails the bulky per-query string and a truncation eats per-query
+  * detail, never `value` (ArtifactFormatSpec pins the budget).
   *
-  * The run is SELF-DIAGNOSING, so a slow number is attributable
-  * instead of narratable:
-  *  - a `BENCH_META` line records the machine conditions (1-minute
-  *    load average, available processors, heap) at run start, plus
-  *    the measured cost of the MLlib warm-up micro-fit
-  *    (`mlwarm_sec`) — direct evidence of how much one-time
-  *    class-loading the warm-up absorbed on THIS run, so a slow q41
-  *    can be split into warm-up-state vs load effects;
-  *  - three fixed CALIBRATION PROBES are interleaved every 25 queries
-  *    AND immediately after q41 (a cadence probe lands shortly before
-  *    it, bracketing the one query whose run-of-record variance
-  *    round 6 could not attribute): a scan
-  *    probe (q02's projection scan), a shuffle probe (a
-  *    data-independent range → hash exchange → aggregate), and a
-  *    DISK I/O probe (write + read-back of a fixed small parquet —
-  *    the round-7 blind spot: CPU-shaped probes sat inside their
-  *    quiet bands while the three most disk-bound queries inflated
-  *    5–16× under co-tenant I/O contention, so the pair could not
-  *    see exactly the condition that hurt most). All three are
-  *    constant workloads whose timing varies only with external
-  *    conditions, and they react differently: external CPU load
-  *    barely moves the scan but inflates exchange/GC-bound work,
-  *    while disk contention hits the I/O probe first — so the
-  *    triple attributes a segment's inflation to CPU vs disk. The
-  *    `[scan_DECIseconds, shuffle_ds, io_ds, load_avg_int]`
-  *    quadruples go on their own `BENCH_CAL` line printed immediately
-  *    before the main line (in run order: start, after every 30th
-  *    query, a dedicated post-q41 probe, end — map positions via the
-  *    numeric query order; e.g. `[2,5,4,4]` = scan 0.2 s, shuffle
-  *    0.5 s, I/O 0.4 s, load 4);
-  *  - every materialized tier in [[graft.engine.Tiers]] is pre-built
-  *    during warm-up (it is corpus-identity-keyed, so the build
-  *    amortizes across every query that probes it — the operators'
-  *    own production story) and its cost is recorded as
-  *    `<key>_build_sec` in BENCH_META and under `builds_sec` on the
-  *    main line (0 = reused, -1 = build failed, with a WARN on
-  *    stderr): a cold-tier run is attributable to the build instead
-  *    of inflating a probe's measured time;
-  *  - every query carries a CONTENTION SAMPLE (1-minute load average
-  *    + system-wide /proc/diskstats read delta over exactly the
-  *    measured span — two cheap reads), compressed onto the main line
-  *    as per-5-query-block digit strings `el`/`eio` (see
-  *    [[envDigits]]): the r14 over-band cluster (q78, q221–q226) fell
-  *    BETWEEN the 25-query CAL probes and could be neither blamed on
-  *    the box nor cleared — the block digits bound any future burst
-  *    to the exact 5-query window it hit;
-  *  - a query that throws is counted in the main line (`"errs":N`,
-  *    omitted at zero; its value stays the elapsed time) with the
-  *    per-query exceptions on a `BENCH_ERRORS` line printed BEFORE
-  *    the main line — a crash can never masquerade as a fast timing,
-  *    and error details can never push the main line's front out of
-  *    the artifact window;
-  *  - between queries every SQL-cache entry AND every leftover
-  *    persisted RDD (MLlib fit internals) is dropped with BLOCKING
-  *    unpersist, and any query costing >5 s is followed by an
-  *    explicit GC — so no measurement inherits its predecessor's
-  *    eviction/GC debt (the r4 pattern: 7–10× spikes on the two
-  *    queries after the ML fit).
+  * Before the timed pass:
+  *  - a SQL and an MLlib warm-up absorb JIT, codegen and MLlib class
+  *    loading (`mlwarm_sec` in BENCH_META), so no query pays them;
+  *  - every tier in [[Tiers.built]] is built (content-addressed: the
+  *    build amortizes across every query that probes it) and its files
+  *    are read once, so no query pays a build or a cold first read.
+  *    Each build reads 0 when reused, its seconds when built and -1 when
+  *    it failed (with a WARN on stderr), under `<key>_build_sec` in
+  *    BENCH_META and `builds_sec` on the main line.
   *
-  * The driver archives only the LAST 2000 characters of the run's
-  * output, so everything of record (BENCH_CAL + the main line + the
-  * sbt success trailer) must fit in that window together — a longer
-  * tail gets its FRONT truncated in the artifact of record. The main
-  * line therefore keys queries by their BARE query number
-  * (`{"1":sec,…,"124":sec}`; the number maps 1:1 to the full
-  * [[SparkEntry.queries]] name) with 2-decimal values — at 124
-  * queries the earlier `qNN` keying left the BENCH_CAL line's front
-  * outside the window.
+  * Between queries every cache and persisted RDD is dropped
+  * ([[SparkEntry.dropAllState]]), so no measurement inherits its
+  * predecessor's state. A query that throws keeps its elapsed time and
+  * is counted on the main line (`"errs":N`, omitted at zero), with the
+  * exceptions on a `BENCH_ERRORS` line before it: a crash never reads
+  * as a fast timing. The full name-keyed record goes to a `BENCH_PERQ`
+  * line and the `BENCH_PERQUERY.json` sidecar ([[perQueryJson]]).
   */
 object Bench {
-
-  private def loadAvg: Double =
-    java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
-
-  /** Cumulative process CPU time in nanos (−1 where the JDK bean lacks
-    * it). One read per query side of the measured span gives the
-    * PROCESS-CPU / WALL-CLOCK ratio — the discriminator the 1-minute
-    * load average smears: a co-tenant steal shows as ratio ≪ the cores
-    * a query normally uses (the process was descheduled while the wall
-    * ran), own-cost shows as ratio ≈ expected. The r15 q238 spike sat
-    * in an `el`-2/`eio`-0 block precisely because load-average
-    * telemetry cannot make that call.
-    */
-  private[graft] def processCpuNanos: Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
-    }
-
-  /** System-wide sectors read since boot, summed over physical block
-    * devices from `/proc/diskstats` (field 6 of each line; partitions
-    * and loop/ram devices are excluded so a read is counted once).
-    * −1 when the file is absent/unreadable (non-Linux) — callers emit
-    * the sentinel rather than fake a zero delta. Two cheap reads per
-    * query (this + loadAvg) are the per-query contention sample the
-    * round-14 over-band cluster was unadjudicatable without: BENCH_CAL's
-    * 25-query segments read quiet while q78/q221–q226 ran 4–6× band,
-    * so the burst could be neither confirmed environmental nor cleared.
-    */
-  private val physDev =
-    "(sd[a-z]+|vd[a-z]+|xvd[a-z]+|nvme\\d+n\\d+|mmcblk\\d+)".r
-  private[graft] def diskSectorsRead(): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/diskstats")
-      try src.getLines().foldLeft(0L) { (acc, line) =>
-        val f = line.trim.split("\\s+")
-        if (f.length > 5 && physDev.matches(f(2))) acc + f(5).toLong
-        else acc
-      } finally src.close()
-    } catch { case NonFatal(_) => -1L }
 
   private[graft] def jsonStr(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -140,8 +46,7 @@ object Bench {
     String.format(java.util.Locale.ROOT, s"%.${places}f", Double.box(v))
 
   /** 2-decimal number with trailing zeros stripped (1.50 → 1.5,
-    * 3.00 → 3) — valid JSON, and the char budget matters here (see the
-    * line-length note in the scaladoc).
+    * 3.00 → 3) — valid JSON in fewer chars.
     */
   private[graft] def num(v: Double): String = {
     val s = dec(v, 2)
@@ -152,25 +57,12 @@ object Bench {
     }
   }
 
-  /** Main-line queries object, keyed by the BARE query number of the
-    * full contract name ("114":1.23 for q114_event_funnel) — the
-    * tighter encoding the 2000-char artifact window needs past ~115
-    * queries: with the earlier qNN keying, 124 keys pushed the
-    * BENCH_CAL line's front outside the window. The number maps 1:1
-    * to the contract name (unique by SparkEntry key discipline); the
-    * window budget is pinned by ArtifactFormatSpec against the REAL
-    * query set.
-    */
-  /** Per-query value at ≤3 chars: 1 decimal under 10 s (100 ms
-    * resolution — SCALE.md's recorded bands keep the extra digit),
-    * integer seconds above. The threshold sits at the rounding
-    * boundary (9.95) so the formatted string can never gain a digit
-    * by rounding up across it. The 4→3 tightening bought the window
-    * room the 151-query surface needs (ArtifactFormatSpec pins the
-    * budget against the real key set).
+  /** A value at ≤3 chars: 1 decimal under 10 s, integer seconds above.
+    * The threshold sits at the rounding boundary (9.95) so the string
+    * can never gain a digit by rounding up across it.
     */
   private[graft] def qnum(v: Double): String = {
-    // display cap at 999: a ≥17-minute query is a hang, and "1000"
+    // display cap at 999: a ≥17-minute reading is a hang, and "1000"
     // would be the one 4-char value the window budget doesn't model
     val vv = math.min(v, 999.0)
     if (vv >= 9.95) dec(vv, 0)
@@ -180,27 +72,17 @@ object Bench {
     }
   }
 
-  /** Main-line per-query encoding, third generation. The dict form
-    * ("114":1.2) hit the window wall at 187 queries; the decisecond
-    * ARRAY ([12,3,…]) hit it at 259 once the round-16 telemetry
-    * (ecpu digits, per-slowest cores, the retry record) had to share
-    * the same 2000-char tail. Query numbers are CONTIGUOUS 1..N by
-    * SparkEntry key discipline, so the scaling form is a fixed-width
-    * STRING: 2 base36 chars per query in numeric order, value =
-    * deciseconds capped at zz = 1295 ds (~130 s — beyond it a query
-    * is a hang, same rationale as the old 999 cap). 2 chars/query vs
-    * the array's ≤5 buys the window ~500 chars at 260 queries and
-    * scales to ~400 queries with room; full per-query resolution
-    * stays in the artifact (decode: i-th pair, base36, ÷10 = sec),
-    * self-described by `enc`, and the human-readable hot list lives
-    * in `slowest_sec`/`retried`. If the contract ever
-    * un-contiguifies, the guard falls back to the dict so values can
-    * never silently mis-attribute.
+  /** Main-line per-query encoding: query numbers are CONTIGUOUS 1..N by
+    * SparkEntry key discipline, so the record is a fixed-width STRING
+    * of 2 base36 chars per query in numeric order, value = deciseconds
+    * capped at zz = 1295 ds (~130 s — beyond it a query is a hang).
+    * Decode: i-th pair, base36, ÷10 = sec. If the contract ever
+    * un-contiguifies, it falls back to a number-keyed dict so values
+    * can never silently mis-attribute.
     */
   private[graft] def queriesJson(results: Seq[(String, Double)]): String = {
-    val nums = results.map(_._1.drop(1).takeWhile(_ != '_').toInt)
-    val contiguous = nums == (1 to results.size)
-    if (contiguous) {
+    val nums = results.map { case (k, _) => SparkEntry.number(k) }
+    if (nums == (1 to results.size)) {
       val sb = new StringBuilder(results.size * 2 + 2)
       sb += '"'
       results.foreach { case (_, v) =>
@@ -212,116 +94,15 @@ object Bench {
       sb.toString
     } else
       results.map { case (k, v) =>
-        val num = k.drop(1).takeWhile(_ != '_')
-        jsonStr(num.dropWhile(_ == '0')) + ":" + qnum(v)
+        jsonStr(SparkEntry.number(k).toString) + ":" + qnum(v)
       }.mkString("{", ",", "}")
   }
 
-  /** Per-10-query-block contention digit strings for the main line:
-    * one digit per block of 10 consecutive queries (numeric suite
-    * order), `el` = the block's max 1-minute load average rounded and
-    * capped at 9, `eio` = log2 of the block's system-wide MB read
-    * from disk (+1), capped at 9 (9 ≥ 511 MB). `-` marks a block
-    * whose sample failed (/proc absent). ~27 chars each at 267
-    * queries. Block width history: 25-query CAL segments averaged the
-    * r14 burst away → 5-query blocks (r14-r17) → 10-query blocks
-    * (r18): the honest window-budget model (3-char worst-width dict
-    * cells, the ob spill record) no longer fits three 60-char strings,
-    * and a 10-query window still bounds a burst tightly because the
-    * SPECIFIC slow rows inside it are carried row-by-row in
-    * slowest_sec/ob/retried/p2 — the digits grade the box, the dicts
-    * name the queries.
-    */
-  private[graft] def envDigits(perQuery: Seq[(Double, Double)]): (String, String) = {
-    val blocks = perQuery.grouped(10).toSeq
-    val loads = blocks.map { b =>
-      val m = b.map(_._1).max
-      if (m < 0) "-" else math.min(9L, math.rint(m).toLong).toString
-    }.mkString
-    val ios = blocks.map { b =>
-      if (b.exists(_._2 < 0)) "-"
-      else {
-        val mb = b.map(_._2).sum
-        math.min(9L, (math.log(mb + 1.0) / math.log(2.0)).toLong).toString
-      }
-    }.mkString
-    (loads, ios)
-  }
-
-  /** Per-10-query-block CPU/WALL digit string for the main line: one
-    * digit per block = the process-CPU/wall ratio (effective cores,
-    * rounded, capped 9) of the block's SLOWEST query — the one a
-    * future judge asks about. Read next to `el`: a slow block whose
-    * `el` digit is high but whose `ecpu` digit matches the query's
-    * normal parallelism was merely sharing a loaded box; a slow block
-    * with ecpu ≪ normal was STALLED by the co-tenant (steal), and a
-    * slow block with normal load but high ecpu was genuinely
-    * computing (own cost — a regression). `-` = the JDK bean gave no
-    * CPU reading. (10-query blocks since r18 — see [[envDigits]].)
-    */
-  private[graft] def cpuDigits(perQuery: Seq[(Double, Double)]): String =
-    perQuery.grouped(10).map { b =>
-      val (_, ratio) = b.maxBy(_._1)
-      if (ratio < 0) "-" else math.min(9L, math.rint(ratio).toLong).toString
-    }.mkString
-
-  /** Top slow queries as a bounded dict — each value `[seconds,
-    * effective_cores]` (the query's own CPU/wall ratio, 1 decimal):
-    * the per-query discriminator for exactly the rows anyone will ask
-    * about. Selection (r17): the top 8 rows over 2 s PLUS every name
-    * in `mustInclude` — the caller passes the final over-2×-band set,
-    * so EVERY over-band row carries a cores figure on the line (the
-    * r16 gap: q160/q161 ran 7× band with no cores evidence because
-    * only the top-8 carried ratios). `cap` bounds the window budget;
-    * rows dropped by the cap are counted by the caller (`obx`) so a
-    * truncated storm never reads as a clean one.
-    */
-  /** The adjudication dicts' window-budget caps — ONE definition each
-    * (review r18): main's carried-set/obx accounting subtracts exactly
-    * these, so a one-sided edit would silently strand rows between
-    * "carried by slowest_sec" and "recorded in ob" with obx none the
-    * wiser. */
-  private[graft] val SlowestCap = 12
-  private[graft] val ObCap = 22
-
-  private[graft] def slowestJson(results: Seq[(String, Double)],
-                                 ratios: Map[String, Double] = Map.empty,
-                                 mustInclude: Set[String] = Set.empty,
-                                 cap: Int = SlowestCap): String =
-    slowestSelect(results, mustInclude).take(cap)
-      .map { case (k, v) =>
-        val num = k.drop(1).takeWhile(_ != '_')
-        val r = ratios.getOrElse(k, -1.0)
-        val rs = if (r < 0) "-1" else qnum(math.min(r, 99.0))
-        // display cap 99 s (r18, window budget): a ≥99 s reading is a
-        // hang; the base36 queries string still carries it at ds
-        // resolution up to 129.5 s
-        jsonStr(num.dropWhile(_ == '0')) + s":[${qnum(math.min(v, 99.0))},$rs]"
-      }
-      .mkString("{", ",", "}")
-
-  /** The pre-cap slowest selection (top-8 over 2 s ∪ mustInclude),
-    * worst first — shared by [[slowestJson]] and the caller's
-    * dropped-by-cap count so the two can never disagree. */
-  private[graft] def slowestSelect(results: Seq[(String, Double)],
-                                   mustInclude: Set[String]): Seq[(String, Double)] = {
-    val top = results.filter(_._2 > 2.0).sortBy(-_._2).take(8)
-    val extra = results.filter(r => mustInclude(r._1))
-    (top ++ extra).distinctBy(_._1).sortBy(-_._2)
-  }
-
-  /** Full name-keyed per-query record (r19, VERDICT item 2): the
-    * driver's PERF diff wants `{"name": sec, …}`, but the 2000-char
-    * tail window physically cannot carry 270 name-keyed entries
-    * (~7 KB; even bare-number decisecond keying is ~2.2 KB before
-    * value/slowest/builds would fit). So the full map rides OUTSIDE
-    * the window: one `BENCH_PERQ` line in the live stdout (printed
-    * before the artifact lines, so at most a harmless mid-JSON
-    * remnant of its tail can land inside the window) plus a
-    * `BENCH_PERQUERY.json` sidecar file in the working directory —
-    * a run launched from the repo leaves its own per-query numbers
-    * on disk where the end-of-round snapshot commit picks them up.
-    * The base36 `queries` string stays the in-window record.
+  /** Full name-keyed per-query record: the 2000-char tail window cannot
+    * carry 270 name-keyed entries (~7 KB), so this map rides OUTSIDE
+    * it, as a `BENCH_PERQ` line printed before the artifact lines plus
+    * a `BENCH_PERQUERY.json` sidecar in the working directory. The
+    * base36 `queries` string stays the in-window record.
     */
   private[graft] def perQueryJson(results: Seq[(String, Double)],
                                   total: Double, cpus: String,
@@ -331,99 +112,18 @@ object Bench {
         .mkString(",") +
       s"""},"value":${dec(math.min(total, 9999.999), 3)},"cpus":${jsonStr(cpus)},"sf":${jsonStr(sf)}}"""
 
-  /** Rows whose reading exceeds `factor`× their pinned band, worst
-    * overshoot first — the shared gate behind the end-of-suite p2
-    * repass and the over-band `slowest_sec` inclusion. A query with
-    * no band row is never flagged (absence is always safe — the
-    * Bands contract), so the table can trail the contract without
-    * mis-gating a brand-new query.
-    */
-  private[graft] def overBandRows(results: Seq[(String, Double)],
-                                  bands: Map[Int, Int],
-                                  factor: Double = 2.0): Seq[(String, Double)] = {
-    def overshoot(name: String, v: Double): Double = {
-      val num = name.drop(1).takeWhile(_.isDigit).toInt
-      bands.get(num).fold(0.0)(b => v * 10.0 / b)
-    }
-    results.filter { case (n, v) => overshoot(n, v) > factor }
-      .sortBy { case (n, v) => -overshoot(n, v) }
-  }
-
-  /** Spill evidence (r18): the first live storm proved the r17 claim
-    * "no over-band row finishes the run without cores evidence" wrong —
-    * `slowest_sec`'s 12-entry cap plus the 5-row p2 budget left five
-    * >2×-band rows (q136/q153/q158/q159/q161) with nothing on the line
-    * but an `obx` count. Every over-band row NOT already carried by
-    * slowest_sec / retried / p2 now lands here as a fixed-width 3-char
-    * record — 2ch base36 query number + 1 digit rounded effective
-    * cores (cap 9, `-` = no bean reading). The row's SECONDS are
-    * deliberately not repeated: the base36 `queries` string already
-    * carries every query's deciseconds by position, so the record adds
-    * only what the judge lacks — the cores figure that separates
-    * steal from own-cost. Rows arrive worst-overshoot first (the
-    * [[overBandRows]] order), so the cap drops the mildest spill;
-    * anything past it stays counted by the caller's `obx` — exactly
-    * the judge's "formally unadjudicated" figure. The cap of 22 means
-    * 44 rows can carry evidence jointly with slowest/retried/p2
-    * before any obx appears (the first live storm needed 28; past 44
-    * over-band rows the whole run is storm-graded by the el digits,
-    * not row by row).
-    */
-  private[graft] def obJson(rows: Seq[(String, Double)],
-                            ratios: Map[String, Double],
-                            cap: Int = ObCap): String = {
-    val sb = new StringBuilder(math.min(rows.size, cap) * 3 + 2)
-    sb += '"'
-    rows.take(cap).foreach { case (k, _) =>
-      val num = math.min(k.drop(1).takeWhile(_.isDigit).toInt, 1295)
-      sb += java.lang.Character.forDigit(num / 36, 36)
-      sb += java.lang.Character.forDigit(num % 36, 36)
-      val r = ratios.getOrElse(k, -1.0)
-      sb += (if (r < 0) '-'
-             else java.lang.Character.forDigit(
-               math.min(math.rint(r).toLong, 9L).toInt, 10))
-    }
-    sb += '"'
-    sb.toString
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
+    val sf = new java.io.File(sfDir).getName
     val rt = Runtime.getRuntime
-    val loadStart = loadAvg
 
-    def dropAllState(): Unit = {
-      // deterministic order + cache isolation: operators persist
-      // interior frames (LSH signatures, MLlib feature vectors);
-      // dropping them between queries — blocking, plus MLlib's
-      // internally-persisted RDDs that clearCache misses — keeps each
-      // measurement self-contained instead of paying the previous
-      // query's eviction/GC pressure
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
-
-    // JIT/codegen + MLlib warm-ups, GUARDED: a warm-up failure (heap
-    // pressure during the fit, broken classpath) must degrade to a
-    // cold first query, never abort the run before BENCH_META and the
-    // artifact lines exist — the same fault-isolation contract as the
-    // calibration probes below. A failed warm-up reads mlwarm_sec -1.
-    // MLlib + breeze class-loading is ~7 s that would otherwise land
-    // inside q41's measurement (Q41Probe: 9.3 s cold vs 2.4 s warm);
-    // the recorded wall-clock of the warm-up itself is direct evidence
-    // when the box was loaded before the first query ever started.
+    // warm-ups are GUARDED: a failure (heap pressure, broken classpath)
+    // degrades to a cold first query, never aborts the run before its
+    // artifact lines exist. A failed MLlib warm-up reads mlwarm_sec -1
     try spark.range(1000000).selectExpr("sum(id * 2)").collect()
     catch { case NonFatal(e) => System.err.println(s"WARN: SQL warm-up failed: $e") }
-    // mlwarm_sec times the MLlib micro-fit alone (comparable across
-    // rounds — the SQL/JIT warm-up above is excluded, as before)
     val mlWarmT0 = System.nanoTime()
     val mlWarmSec = try {
       import org.apache.spark.sql.functions.col
@@ -439,17 +139,12 @@ object Bench {
           .setMaxIter(1))).fit(warm)
       warmModel.transform(warm).select(
         org.apache.spark.ml.functions.vector_to_array(col("probability"))(1)).count()
-      // the warm-up fit leaves MLlib-persisted RDDs behind — drop them
-      // too (clearCache alone is the exact r4 mistake), so q01 starts
-      // from the same zero-state every measured query gets
-      dropAllState()
+      // the fit leaves MLlib-persisted RDDs behind; q01 starts from the
+      // same empty state every measured query gets
+      SparkEntry.dropAllState(spark)
       (System.nanoTime() - mlWarmT0) / 1e9
     } catch { case NonFatal(_) => -1.0 }
-    // pre-build every registered tier (content-addressed ⇒ legitimate
-    // amortization: production builds once per corpus snapshot and
-    // probes many times), in registry order. Each reads 0 when an
-    // existing tier was reused, its build seconds when built and -1
-    // when the build failed — a probe's measured time is never a build
+
     def tierStep[A](t: Tiers.Tier, what: String)(f: => A): Option[A] =
       try Some(f) catch { case NonFatal(e) =>
         System.err.println(s"WARN: tier ${t.key} $what failed: $e")
@@ -459,18 +154,13 @@ object Bench {
       val t0 = System.nanoTime()
       t.key -> tierStep(t, "build") {
         val built = t.build(spark, sfDir)
-        dropAllState()
+        SparkEntry.dropAllState(spark)
         if (built) (System.nanoTime() - t0) / 1e9 else 0.0
       }.getOrElse(-1.0)
     }
-    // PRE-TOUCH every built tier: stream-read every byte of every frame
-    // file once, so the measured probes never pay a cold or contended
-    // FIRST read of their materialized inputs (the r12 q64–q110
-    // cluster: the CAL I/O probe inflated 2.2–3.7× in exactly the
-    // segments where the frame-consumer queries spiked). A raw byte
-    // stream warms the page cache with zero Spark overhead. Per tier,
-    // so one failed build never leaves the remaining frames cold;
-    // pretouch_mb records how much the probes never re-read cold.
+    // pre-touch: stream every byte of every built tier's files once (a
+    // raw read warms the page cache with no Spark overhead), per tier,
+    // so one failed build never leaves the remaining frames cold
     val touchT0 = System.nanoTime()
     var touchedBytes = 0L
     val buf = new Array[Byte](1 << 20)
@@ -492,241 +182,28 @@ object Bench {
     }
     val pretouchSec = (System.nanoTime() - touchT0) / 1e9
     val buildsMeta = tierBuildSec
-      .map { case (k, v) => s""""${k}_build_sec":${dec(v, 2)}""" }.mkString(",")
-    println(s"""BENCH_META {"load_avg_start":${dec(loadStart, 2)},"available_processors":${rt.availableProcessors()},"heap_max_gb":${dec(rt.maxMemory() / 1e9, 1)},"spark_cpus":${jsonStr(cpus)},"mlwarm_sec":${dec(mlWarmSec, 2)},$buildsMeta,"pretouch_sec":${dec(pretouchSec, 2)},"pretouch_mb":${dec(touchedBytes / 1e6, 1)},"sf":${jsonStr(sfDir)}}""")
-
-    // a probe must never abort the run: a broken environment (e.g.
-    // missing data dir) should still produce BENCH_META, per-query
-    // error records, and the main JSON line — not a bare stack trace
-    // with no artifact. A failed probe reads -1.
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { f; (System.nanoTime() - t0) / 1e9 }
-      catch { case NonFatal(_) => -1.0 }
-    }
-    def calScan(): Double = timed {
-      graft.operators.Projections
-        .projectAndCast(graft.engine.Tables.lineitem(spark, sfDir)).count()
-    }
-    def calShuffle(): Double = timed {
-      spark.range(4000000L).selectExpr("id % 1000 AS k")
-        .groupBy("k").count().count()
-    }
-    // disk I/O probe: write + read back a fixed ~2 MB parquet through
-    // the same filesystem the heavy queries use (tmpdir — where the
-    // IVF index and CC checkpoints live). Constant workload, so its
-    // timing moves ONLY with disk/page-cache contention — the round-7
-    // failure mode the CPU-shaped pair above cannot see
-    val ioDir = java.nio.file.Files
-      .createTempDirectory("graft_bench_io").toFile
-    // deleteOnExit is useless for a non-empty dir — recurse on a
-    // shutdown hook so repeated runs don't silt up the very tmpfs the
-    // probe is measuring
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(ioDir)
-    }
-    val ioPath = new java.io.File(ioDir, "probe").getAbsolutePath
-    def calIo(): Double = timed {
-      spark.range(300000L).selectExpr("id", "id % 97 AS k", "cast(id as string) AS s")
-        .coalesce(1).write.mode("overwrite").parquet(ioPath)
-      spark.read.parquet(ioPath).count()
-    }
-    calScan(); calShuffle(); calIo() // warm the probes' own paths once
-    val calibrations = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double, Double)]
-    def recordCal(): Unit = calibrations += ((calScan(), calShuffle(), calIo(), loadAvg))
-    recordCal()
+      .map { case (k, v) => s""""${k}_build_sec":${num(v)}""" }.mkString(",")
+    println(s"""BENCH_META {"available_processors":${rt.availableProcessors()},"heap_max_gb":${dec(rt.maxMemory() / 1e9, 1)},"spark_cpus":${jsonStr(cpus)},"mlwarm_sec":${num(mlWarmSec)},$buildsMeta,"pretouch_sec":${num(pretouchSec)},"pretouch_mb":${dec(touchedBytes / 1e6, 1)},"sf":${jsonStr(sfDir)}}""")
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // per-query contention samples (load average + system disk-read
-    // delta over exactly the measured span): the prevSectors baseline
-    // is re-read AFTER the inter-query housekeeping (unpersist, GC,
-    // calibration probes — calIo alone writes+reads ~4 MB) so probe
-    // I/O is never attributed to the next query's delta
-    val envSamples = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    var prevSectors = diskSectorsRead()
-    // NUMERIC sort on the qNN prefix: plain lexicographic order puts
-    // q100–q111 between q09 and q10 ("0" < "_"), which silently
-    // shifted every calibration-probe position once 3-digit queries
-    // existed — the cadence documented above only holds in numeric
-    // order
-    // per-query CPU/wall ratios (see processCpuNanos) and the storm
-    // retry record: any query whose FIRST reading exceeds 5× its
-    // pinned in-suite band (graft.Bands — authored from quiet triples)
-    // is re-measured ONCE after full state drop, with BOTH readings
-    // recorded on the main line and the better one standing as the
-    // query's value. Capped at 5 retries per run: a storm hitting
-    // more than 5 queries is a box-wide event no retry salvages, and
-    // the cap bounds both runtime and the artifact's retried dict.
-    // The r15 driver run lost its grade to exactly one such window —
-    // q79/q147/q188 read 6–20× band under a load-18 probe while the
-    // same binary read them in band quiet, and the single-pass
-    // artifact of record had no second reading to cite.
-    val cpuRatios = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val wallRatio = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    // retried = [first, retry, cores-of-kept] — the third element (r17)
-    // is the kept reading's effective cores, so a retry that LANDS OVER
-    // band is adjudicable from the line itself (the r16 q160/q161 gap:
-    // both readings over band, no cores evidence anywhere)
-    val retried = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double, Double)]
-    // one measured attempt: (wall sec, cpu/wall ratio, load, MB read) —
-    // shared by the suite pass, the in-flight 5× retry, and the r17
-    // end-of-suite second pass
-    def attemptQ(name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (Double, Double, Double, Double) = {
-      val c0 = processCpuNanos
+    val queries = SparkEntry.queries
+    val results = SparkEntry.names.map { name =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
+      try queries(name)(spark, sfDir).count()
       catch { case NonFatal(e) =>
         errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(120)}"
       }
-      val wall = System.nanoTime() - t0
-      val c1 = processCpuNanos
-      val ratio = if (c0 < 0 || c1 < 0 || wall <= 0) -1.0
-        else (c1 - c0).toDouble / wall
-      val sectors = diskSectorsRead()
-      val io = if (sectors < 0 || prevSectors < 0) -1.0
-        else (sectors - prevSectors) * 512.0 / 1e6
-      (wall / 1e9, ratio, loadAvg, io)
+      val sec = (System.nanoTime() - t0) / 1e9
+      SparkEntry.dropAllState(spark)
+      // a heavy query's garbage is collected before the next one starts
+      if (sec > 5.0) System.gc()
+      name -> sec
     }
-    val results0 = SparkEntry.queries.toSeq
-      .sortBy { case (name, _) =>
-        (name.drop(1).takeWhile(_.isDigit).toInt, name) }
-      .zipWithIndex
-      .map { case ((name, fn), i) =>
-        val first = attemptQ(name, fn)
-        val num = name.drop(1).takeWhile(_.isDigit).toInt
-        val overBand = Bands.upperDs.get(num)
-          .exists(b => first._1 * 10.0 > 5.0 * b)
-        val chosen =
-          if (first._1 > 1.0 && overBand && !errors.contains(name) &&
-              retried.size < 5) {
-            dropAllState()
-            if (first._1 > 5.0) System.gc()
-            prevSectors = diskSectorsRead()
-            val second = attemptQ(name, fn)
-            // a retry that ERRORED (or ran slower) never displaces the
-            // first reading — the retry exists to separate weather
-            // from regression, not to hide a fault. A flaky retry
-            // failure neither counts the query as errored (the first
-            // attempt SUCCEEDED and that reading stands) nor records
-            // its wall as a reading: the artifact shows [first, -1]
-            // so a failed attempt can never masquerade as a calm
-            // re-measurement
-            if (errors.contains(name)) {
-              errors.remove(name)
-              retried(name) = (first._1, -1.0, first._2)
-              first
-            } else {
-              val kept = if (second._1 < first._1) second else first
-              retried(name) = (first._1, second._1, kept._2)
-              kept
-            }
-          } else first
-        // env + cpu samples reflect the RETAINED attempt
-        envSamples += ((chosen._3, chosen._4))
-        cpuRatios(name) = chosen._2
-        wallRatio += ((chosen._1, chosen._2))
-        dropAllState()
-        if (chosen._1 > 5.0) System.gc()
-        // every-30 cadence plus a dedicated post-q41 probe (every-20
-        // through 159 queries, every-25 at 169 — each stretch paid for
-        // by the growing main line's share of the artifact window; the
-        // q41 bracket survives because its probe is cadence-independent)
-        if ((i + 1) % 30 == 0 || name.startsWith("q41")) recordCal()
-        prevSectors = diskSectorsRead()
-        name -> chosen._1
-      }
-    // END-OF-SUITE SECOND PASS (r17): the in-flight 5× gate has a
-    // 5-retry budget, and the r16 storm exhausted it inside its first
-    // window — later over-band rows (q110 3.3× band at 5.9 s, q190,
-    // q222) never got a second reading and stayed formally
-    // unadjudicated. By suite end the storm has usually passed, so any
-    // row whose KEPT reading still exceeds 2× its pinned band is
-    // re-measured once under a SEPARATE budget, worst overshoot first.
-    // Same displacement rule as the in-flight retry: a faster re-read
-    // stands as the value (both readings on the line under "p2"), a
-    // slower or failed one changes nothing. The el/eio/ecpu block
-    // digits keep describing the FIRST pass — they are the storm's
-    // record, not the re-read's.
-    val resultsMap = scala.collection.mutable.LinkedHashMap(results0: _*)
-    val pass2 = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val queryFns = SparkEntry.queries
-    // snapshot the q41 fit share BEFORE any p2 re-run can overwrite it:
-    // q41_fit_sec must decompose the RETAINED q41 reading — if a p2
-    // re-read of q41 is discarded, the artifact keeps pass 1's fit
-    val fitSecPass1 = graft.ml.MlQueries.lastFitSec
-    // p2 budget shaping (learned from the first storm the gate saw
-    // live): rank by ABSOLUTE excess seconds, not overshoot ratio — a
-    // 0.7 s row at 3.5× its 0.2 band must not outrank a 5.9 s row at
-    // 3.3× (the rows a judge asks about are the expensive ones, and
-    // ratio ordering re-creates the r16 budget-exhaustion failure one
-    // level up) — and skip sub-1 s rows entirely (the in-flight
-    // gate's floor): they stay visible in slowest_sec with cores, but
-    // a re-read would spend budget adjudicating noise
-    overBandRows(resultsMap.toSeq.filterNot(r => errors.contains(r._1)),
-        Bands.upperDs)
-      .filter(_._2 > 1.0)
-      .sortBy { case (n, v) =>
-        val num = n.drop(1).takeWhile(_.isDigit).toInt
-        -(v - Bands.upperDs.getOrElse(num, 0) / 10.0)
-      }
-      .take(5)
-      .foreach { case (name, kept) =>
-        dropAllState()
-        System.gc()
-        prevSectors = diskSectorsRead()
-        val second = attemptQ(name, queryFns(name))
-        if (errors.contains(name)) {
-          // flaky re-run failure: the suite reading stands, the failed
-          // re-read records -1 (never a fake calm number)
-          errors.remove(name)
-          pass2(name) = (kept, -1.0)
-        } else {
-          pass2(name) = (kept, second._1)
-          if (second._1 < kept) {
-            resultsMap(name) = second._1
-            cpuRatios(name) = second._2
-            // retried's third element is "cores of the KEPT reading":
-            // when the p2 re-read displaces an in-flight-retried row's
-            // value, the cores element must follow it or the two
-            // adjudication dicts disagree about which reading `kept`
-            // refers to (ADVICE r17)
-            retried.get(name).foreach { case (a, b, _) =>
-              retried(name) = (a, b, second._2) }
-          }
-        }
-        dropAllState()
-        prevSectors = diskSectorsRead()
-      }
-    val results = resultsMap.toSeq
-    recordCal()
-    val (envLoad, envIo) = envDigits(envSamples.toSeq)
-    val envCpu = cpuDigits(wallRatio.toSeq)
+    val total = results.map(_._2).sum
 
-    val qs = queriesJson(results)
-    // DECISECOND integers, display-capped at 99 (a ≥ 9.9 s probe is
-    // pure pathology — the cap keeps the worst-case artifact model
-    // finite): at 175 queries the main line owns most of the driver's
-    // 2000-char tail window, so the CAL quadruples carry the minimum
-    // chars that still attribute a segment (ArtifactFormatSpec models
-    // the budget; the next lever, if the query count outgrows this,
-    // is integer-decisecond per-query values)
-    def ds(v: Double): Long = math.min(math.rint(v * 10).toLong, 99L)
-    def ld(v: Double): Long = math.min(math.rint(v).toLong, 99L)
-    val cal = calibrations
-      .map { case (scan, shuf, io, load) =>
-        s"[${ds(scan)},${ds(shuf)},${ds(io)},${ld(load)}]" }
-      .mkString("[", ",", "]")
-    // the full name-keyed per-query record (see perQueryJson): its
-    // line prints FIRST so the bulk stays outside the tail window,
-    // and a failed sidecar write warns (before the artifact lines, so
-    // outside the tail) instead of costing the run
-    val perqLine = perQueryJson(results, results.map(_._2).sum, cpus,
-      new java.io.File(sfDir).getName)
+    // the name-keyed record prints FIRST so its bulk stays outside the
+    // tail window; a failed sidecar write warns instead of costing the run
+    val perqLine = perQueryJson(results, total, cpus, sf)
     println("BENCH_PERQ " + perqLine)
     try {
       val pq = new java.io.PrintWriter("BENCH_PERQUERY.json")
@@ -735,102 +212,21 @@ object Bench {
       case NonFatal(e) =>
         System.err.println(s"WARN: could not write BENCH_PERQUERY.json: $e")
     }
-    // the artifact lines must be the LAST output the driver's
-    // 2000-char tail sees: stop Spark FIRST (its shutdown path logs
-    // WARNs under load — the r11 artifact lost the main line's front
-    // to exactly that noise landing after it) and silence the logger
-    // for anything a shutdown hook still emits. Nothing below needs
-    // the session — every value is already computed.
+    // the artifact lines must be the LAST output, inside the 2000-char
+    // tail: stop Spark first (its shutdown path logs WARNs under
+    // load) with the logger silenced; a broken stop never costs them
     spark.sparkContext.setLogLevel("OFF")
-    // stop() guarded: a broken shutdown path (the degraded environments
-    // everything above defends against) must never cost the artifact
-    // lines — they are the run's entire record
     try spark.stop()
     catch { case NonFatal(e) => System.err.println(s"WARN: spark.stop() failed: $e") }
-    // error DETAILS go on their own line BEFORE the main one so they
-    // can never push the main line's front out of the 2000-char
-    // artifact window; the main line carries only the failure count
-    // (omitted when zero, like every other char it can spare)
     if (errors.nonEmpty)
       println("BENCH_ERRORS {" +
         errors.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }.mkString(",") + "}")
     val errs = if (errors.isEmpty) "" else s""","errs":${errors.size}"""
-    val total = results.map(_._2).sum
-    // the calibration triples ride their own pre-main line: both lines
-    // plus the sbt success trailer fit the 2000-char tail window
-    // together (~1100 chars at 77 queries)
-    println(s"""BENCH_CAL $cal""")
-    // slowest is the judge's hot list: top-8 plus EVERY row whose
-    // final reading still exceeds 2× its pinned band, each with its
-    // effective-cores figure (the r16 demand: an over-band row carries
-    // either an in-band re-read or the cores that name the starvation);
-    // obx counts over-band rows the cap dropped — a truncated storm
-    // can never read as a clean run
-    val obRows = overBandRows(results, Bands.upperDs)
-    val obNames = obRows.map(_._1).toSet
-    val slow = slowestJson(results, cpuRatios.toMap, obNames)
-    // the spill record (r18): over-band rows the slowest_sec cap
-    // dropped AND neither retry dict carries — each gets a compact
-    // [qnum, cores] record (3 chars — see obJson) so the artifact
-    // itself adjudicates every final >2x-band row. obx counts only
-    // rows with NO on-line evidence at all (spill past ob's cap of
-    // 22); obx > 0 means the run exceeded the per-row adjudication
-    // envelope and is graded wholesale by the el/ecpu digits
-    val carried = slowestSelect(results, obNames).take(SlowestCap).map(_._1).toSet
-    val spill = obRows.filterNot(r =>
-      carried(r._1) || retried.contains(r._1) || pass2.contains(r._1))
-    val obJ = if (spill.isEmpty) "" else
-      s""","ob":${obJson(spill, cpuRatios.toMap)}"""
-    val obDropped = math.min(math.max(0, spill.size - ObCap), 99)
-    val obx = if (obDropped == 0) "" else s""","obx":$obDropped"""
-    // both readings of every retried query, [first, retry, cores] —
-    // nonEmpty only when the 5× gate fired (bounded at 5 entries)
-    def qKey(k: String): String =
-      jsonStr(k.drop(1).takeWhile(_ != '_').dropWhile(_ == '0'))
-    // all retried/p2 readings share slowest_sec's 99 s display cap
-    // (the -1 failed-rerun sentinel survives the min)
-    val retr = if (retried.isEmpty) "" else
-      ","+"\"retried\":" + retried.map { case (k, (a, b, c)) =>
-        val cs = if (c < 0) "-1" else qnum(math.min(c, 99.0))
-        qKey(k) + s":[${qnum(math.min(a, 99.0))},${qnum(math.min(b, 99.0))},$cs]"
-      }.mkString("{", ",", "}")
-    // end-of-suite second-pass readings, [kept, rerun] — nonEmpty only
-    // when a row finished the suite over 2× band (bounded at 5)
-    val p2s = if (pass2.isEmpty) "" else
-      ","+"\"p2\":" + pass2.map { case (k, (a, b)) =>
-        qKey(k) + s":[${qnum(math.min(a, 99.0))},${qnum(math.min(b, 99.0))}]"
-      }.mkString("{", ",", "}")
-    // q41_fit_sec: the fit-side share of q41's measured time (see
-    // MlQueries.lastFitSec) — printed here because the fit runs inside
-    // the query loop, after BENCH_META is already out. If q41 went
-    // through the p2 repass, use the live value only when the re-read
-    // was RETAINED; a discarded re-read's fit must not displace the
-    // fit of the reading the artifact actually reports
-    val q41p2Kept = pass2.exists { case (k, (a, b)) =>
-      k.startsWith("q41") && b >= 0 && b < a }
-    val fitSec = if (pass2.keys.exists(_.startsWith("q41")) && !q41p2Kept)
-      fitSecPass1 else graft.ml.MlQueries.lastFitSec
-    // builds_sec rides the MAIN line (not only BENCH_META, which
-    // prints before the query loop and falls outside the driver's
-    // 2000-char tail): the artifact of record is self-adjudicating on
-    // whether the content-addressed builds were reused (0), rebuilt
-    // (secs), or failed (-1) in the run of record — plus the pretouch
-    // cost that moved cold-read exposure out of the measured probes
+    // 3-char cells (a build past 99 s is pathology; BENCH_META has the
+    // exact figure), plus the pre-touch cost under "touch"
     val buildsJson = (tierBuildSec :+ ("touch" -> pretouchSec))
-      // the slowest_sec 99 s display cap (r18 window budget); a build
-      // past it is pathology, and the exact figure is in BENCH_META
       .map { case (k, v) => jsonStr(k) + ":" + qnum(math.min(v, 99.0)) }
       .mkString("{", ",", "}")
-    // eio earns its chars only when disk contention existed: an
-    // all-zero string is dropped (enc says so), which at 300 queries
-    // buys the window ~70 chars on the common quiet run
-    val eio = if (envIo.nonEmpty && envIo.forall(_ == '0')) ""
-      else s""","eio":${jsonStr(envIo)}"""
-    // FIELD ORDER is the artifact's survival order: the driver keeps
-    // the LAST 2000 chars, so the suite total (`value`) and the
-    // adjudication dicts (slowest/retried/p2) trail the bulky queries
-    // string — r16's total was truncated out of the artifact of record
-    // precisely because `value` led the line
-    println(s"""{"metric":"total","unit":"sec","enc":"q=b36 ds; el,eio,ecpu=10q-blk load,log2MB,cores; slowest=[s,cores] top8+>2xband; ob=q2c1 spill; obx=no-evid; retried=[a,b,c] 5x; p2=[a,b] end 2x; eio cut if 0","queries":$qs,"el":${jsonStr(envLoad)},"ecpu":${jsonStr(envCpu)}$eio,"l0":${num(math.min(loadStart, 99.0))},"q41_fit_sec":${qnum(fitSec)},"builds_sec":$buildsJson$retr$p2s$errs,"slowest_sec":$slow$obJ$obx,"value":${dec(math.min(total, 9999.999), 3)},"sf":${jsonStr(new java.io.File(sfDir).getName)}}""")
+    println(s"""{"metric":"total","unit":"sec","queries":${queriesJson(results)},"builds_sec":$buildsJson$errs,"value":${dec(math.min(total, 9999.999), 3)},"sf":${jsonStr(sf)}}""")
   }
 }

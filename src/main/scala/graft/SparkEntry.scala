@@ -911,4 +911,56 @@ object SparkEntry {
     * rows-only check.
     */
   def oracleSql: Map[String, String] = OracleSql.all
+
+  /** A query's number: 114 for `q114_event_funnel`. Numbers are unique
+    * and contiguous; numeric order is the order every main runs in
+    * (lexicographic order would put q100 before q10). */
+  def number(name: String): Int = name.drop(1).takeWhile(_.isDigit).toInt
+
+  /** Every query name, in numeric order. */
+  def names: Seq[String] = queries.keys.toSeq.sortBy(n => (number(n), n))
+
+  /** The query names `spec` selects, in numeric order. `spec` is a
+    * comma-separated list whose items are each an exact name, a bare
+    * `qN`/`qNN` (the query numbered N: `q1` is `q01_hourly_agg`) or a
+    * name prefix (`q24_`). An item that selects nothing fails.
+    */
+  def select(spec: String): Seq[String] = {
+    val all = names
+    val items = spec.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
+    require(items.nonEmpty, s"no query names in '$spec'")
+    items.flatMap { s =>
+      val hit =
+        if (all.contains(s)) Seq(s)
+        else if (s.matches("q\\d+")) all.filter(number(_) == s.drop(1).toInt)
+        else all.filter(_.startsWith(s))
+      require(hit.nonEmpty, s"no query matches '$s'")
+      hit
+    }.distinct.sortBy(n => (number(n), n))
+  }
+
+  /** The local session the mains (Bench, Verify, Probe) run in:
+    * `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, UTC, no UI. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Drops every SQL-cache entry and every persisted RDD (MLlib fit
+    * internals and CC checkpoints, which `clearCache` misses), blocking,
+    * so the next query starts from the same empty state instead of
+    * paying its predecessor's eviction and GC. */
+  def dropAllState(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+  }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -7,41 +6,22 @@ import scala.util.control.NonFatal
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional third arg: comma-separated query-name prefixes — builder
-    // iteration aid (the driver always runs the full dump)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // optional third arg: a SparkEntry.select list (e.g. `q24_,q25_`)
+    // for iterating on a few queries; without it, every query is dumped
+    val names =
+      if (args.length > 2) SparkEntry.select(args(2)) else SparkEntry.names
+    val spark = SparkEntry.session()
     new java.io.File(outDir).mkdirs()
-    // numeric qNN order (lexicographic puts q100 before q10) — keeps
-    // the dump order aligned with Bench and the driver's artifacts
-    SparkEntry.queries.toSeq
-      .filter { case (name, _) =>
-        only.forall(ps => ps.exists(name.startsWith)) }
-      .sortBy { case (name, _) =>
-        (name.drop(1).takeWhile(_.isDigit).toInt, name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // operators persist interior frames; keep queries independent.
-      // Also drop leftover persistent RDDs (MLlib fit state, CC
-      // checkpoints — clearCache misses them, the round-4 bench
-      // lesson): every query's output is already on disk by here, so
-      // nothing can need recomputation, and state stays bounded
-      // across the 79-query dump instead of accumulating
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // every query's output is already on disk by here, so dropping
+      // its state keeps the queries independent and memory bounded
+      SparkEntry.dropAllState(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

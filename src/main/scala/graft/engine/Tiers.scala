@@ -9,7 +9,8 @@ import graft.operators.{Dedup, JsonRouting, Multimodal, Similarity, TextAnalysis
   * tier the queries probe, in the order `graft.Bench` builds,
   * pre-touches and reports them (`builds_sec` key order — a tier that
   * reads another tier comes after it: `cc` before `fam`, `tok` before
-  * `arm`/`tr`). A new tier is one entry here.
+  * `arm`/`tr`); `graft.apps.Probe build` rebuilds one by key. A new
+  * tier is one entry here.
   *
   * A tier lives at
   * `<java.io.tmpdir>/graft_<kind>_<dataset name>_<md5(abs dataset path)[:8]>/<prefix><content hash>`.
@@ -191,6 +192,7 @@ object Tiers {
   /** Every tier, in registry order. */
   val all: Seq[Tier] = registry.toList
 
-  /** The tiers Bench builds, pre-touches and reports, in order. */
+  /** The tiers with a build, in order: Bench builds, pre-touches and
+    * reports them; `Probe build` rebuilds one by key. */
   val built: Seq[Tier] = all.filter(_.hasBuild)
 }

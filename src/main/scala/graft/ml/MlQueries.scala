@@ -14,16 +14,6 @@ import graft.engine.Tables
   */
 object MlQueries {
 
-  /** Wall-clock of the LAST [[trainEvalConfusion]] `pipeline.fit`
-    * (scaler fit + LBFGS passes) — the bench reads it after the run
-    * and reports `q41_fit_sec` on the main line, so the recurring
-    * "q41 slow" flag splits into fit-side (treeAggregate passes under
-    * load) vs score-side (the full-test-split transform) instead of
-    * being argued from totals. -1 until a fit has run; written only
-    * from the single-threaded query loop.
-    */
-  @volatile private[graft] var lastFitSec: Double = -1.0
-
   /** R1+M1+M2+M3+M5+A10 end-to-end: assemble/scale/LR over lineitem,
     * predicting high-quantity lines from price attributes, evaluated
     * as a confusion matrix. This runs inside the per-round bench, and
@@ -73,9 +63,7 @@ object MlQueries {
     // re-run the parquet scan + randomSplit + sample — cache the
     // SAMPLED frame (the only one fit touches) for the fit's duration
     train.count()
-    val fitT0 = System.nanoTime()
     val model = pipeline.fit(train)
-    lastFitSec = (System.nanoTime() - fitT0) / 1e9
     // blocking: the bench measures the NEXT query's wall-clock too —
     // a lazy unpersist leaves block eviction + GC of MLlib's fit-time
     // state to land inside whatever runs next (the r4 q42/q43 spikes)

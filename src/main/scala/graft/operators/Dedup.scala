@@ -57,10 +57,11 @@ object Dedup {
     *
     * Runs on the native [[graft.functions.ShingleGenerator]] UDTF:
     * ~1.6× faster than the composable split→transform→explode form
-    * (A/B in `graft.apps.ShinglePerf` — the generator emits shingles
-    * lazily from the token array instead of materializing the full
-    * shingle array per document), with the identical output multiset
-    * (spec-asserted, and every downstream oracle hash unchanged).
+    * (measured under the cascade's distinct-shingle aggregate — the
+    * generator emits shingles lazily from the token array instead of
+    * materializing the full shingle array per document), with the
+    * identical output multiset (PipelineOpsSpec asserts it, and every
+    * downstream oracle hash is unchanged).
     */
   def shingleDocs(docs: DataFrame, n: Int = 3): DataFrame =
     // the width tag rides a second projection: an alias directly on
@@ -490,7 +491,7 @@ object Dedup {
   /** The most edges [[dupClustersFromPairs]] labels on the driver. The
     * choice depends on the edge count alone, not on a session option.
     * The bound comes from driver memory, not speed. Measured with
-    * [[graft.apps.CcSizeProbe]] on a 4-core machine (local[4]), the
+    * `graft.apps.Probe ccsize` on a 4-core machine (local[4]), the
     * driver path beat the loop at every size
     * measured, 10k to 1M edges, by 4 to 8 times, so the speed
     * crossover lies above 1M. But the path holds the collected rows,
@@ -2060,7 +2061,7 @@ object Dedup {
                     divisor: Int = 8): DataFrame = {
     // native one-pass chunker (graft.functions.ChunkGenerator): same
     // boundary rule as the composable HOF form — spec-asserted
-    // equivalent — at ~18× its speed (QueryProbe, 5 000 docs / 16
+    // equivalent — at ~18× its speed (timed per query, 5 000 docs / 16
     // threads: 17.6 s composable → 0.9 s native; chunk text still
     // dies in the scan stage, only (doc_id, idx, fp) ever shuffles).
     // PERSISTED (the hashedShingleSets contract): both the

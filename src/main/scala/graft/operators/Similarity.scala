@@ -1796,8 +1796,7 @@ object Similarity {
     */
   def leakTypology(emb: DataFrame, docs: DataFrame, modulus: Int = 23,
                    topK: Int = 50, n: Int = 3,
-                   shingles: Option[DataFrame] = None,
-                   registerCache: DataFrame => Unit = _ => ()): DataFrame =
+                   shingles: Option[DataFrame] = None): DataFrame =
     leakQuadrants(
         emb.filter(col("vec_id") % modulus =!= 0),
         emb.filter(col("vec_id") % modulus === 0),
@@ -1805,8 +1804,7 @@ object Similarity {
         docs.filter(col("doc_id") % modulus === 0),
         topK, n,
         corpusShingles = shingles.map(_.filter(col("doc_id") % modulus =!= 0)),
-        evalShingles = shingles.map(_.filter(col("doc_id") % modulus === 0)),
-        registerCache = registerCache)
+        evalShingles = shingles.map(_.filter(col("doc_id") % modulus === 0)))
       .groupBy("quadrant")
       .agg(count(lit(1)).cast("bigint").as("n_docs"),
         (floor(sum("mc6").cast("double") / count(lit(1)) + 0.5) / 1e6)
@@ -1829,8 +1827,7 @@ object Similarity {
                     corpusDocs: DataFrame, evalDocs: DataFrame,
                     topK: Int = 50, n: Int = 3,
                     corpusShingles: Option[DataFrame] = None,
-                    evalShingles: Option[DataFrame] = None,
-                    registerCache: DataFrame => Unit = _ => ()): DataFrame = {
+                    evalShingles: Option[DataFrame] = None): DataFrame = {
     val ngram = TrainingData
       .evalDecontaminate(corpusDocs, n, evalDocs = Some(evalDocs),
         shingles = corpusShingles, evalShingles = evalShingles)
@@ -1838,15 +1835,12 @@ object Similarity {
         expr("CAST((n_overlap * 10000) div n_shingles AS BIGINT)")
           .as("contam_bp"))
     // two consumers (the frame itself + the queue cut) — persist the
-    // narrow (id, max) frame so the panel scan runs ONCE, and HAND THE
-    // HANDLE to the caller via registerCache: a long-lived session
-    // (CorpusPipeline with clearCacheOnExit=false, repeated q258/q260
-    // probes) can then release exactly this block instead of either
-    // leaking it or nuking the whole catalog cache
+    // narrow (id, max) frame so the panel scan runs ONCE; a long-lived
+    // session (repeated q258/q260 probes) releases it with
+    // `catalog.clearCache()`
     val perDoc = evalScoredPairsFrames(emb, evalEmb)
       .groupBy("vec_id").agg(max("c6").as("mc6"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registerCache(perDoc)
     val queue = perDoc.orderBy(col("mc6").desc, col("vec_id").asc)
       .limit(topK).select(col("vec_id"), lit(true).as("in_queue"))
     perDoc
@@ -1885,10 +1879,9 @@ object Similarity {
                           topK: Int = 50, n: Int = 3,
                           dropParaphrase: Boolean = true,
                           corpusShingles: Option[DataFrame] = None,
-                          evalShingles: Option[DataFrame] = None,
-                          registerCache: DataFrame => Unit = _ => ()): DataFrame =
+                          evalShingles: Option[DataFrame] = None): DataFrame =
     leakQuadrants(emb, evalEmb, corpusDocs, evalDocs, topK, n,
-        corpusShingles, evalShingles, registerCache)
+        corpusShingles, evalShingles)
       .filter(col("quadrant") === "verbatim" ||
         (lit(dropParaphrase) && col("quadrant") === "paraphrase"))
       .select(col("vec_id"), col("quadrant"))

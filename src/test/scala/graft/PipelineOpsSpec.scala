@@ -1621,26 +1621,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       "prebuildShingles3 rebuilt a committed frame")
   }
 
-  test("leakQuadrants hands its persisted per-doc frame to registerCache for targeted release") {
-    val emb = Tables.embeddings(spark, sfDir)
-    val registered = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    val m = 23
-    val q = Similarity.leakQuadrants(
-      emb.filter(col("vec_id") % m =!= 0), emb.filter(col("vec_id") % m === 0),
-      documents.filter(col("doc_id") % m =!= 0),
-      documents.filter(col("doc_id") % m === 0),
-      registerCache = registered += _)
-    assert(q.count() > 0)
-    // exactly one interior cache, and the handle really releases it —
-    // a clearCacheOnExit=false pipeline run can unpersist THIS block
-    // instead of leaking it or clearing the whole catalog
-    assert(registered.size == 1)
-    assert(registered.head.storageLevel.useMemory)
-    registered.foreach(_.unpersist(blocking = true))
-    assert(!registered.head.storageLevel.useMemory)
-  }
-
   test("dedupThresholdSweep: rows recompute from the pair frame; monotone laws; sub-floor grid rejected") {
     val base = java.nio.file.Files
       .createTempDirectory("graft-sweep-base").toString

@@ -4,6 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.LocalCheckpointFileManager
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Tables
@@ -17,6 +19,19 @@ import graft.streaming.StreamPipeline
   */
 class StatefulAndCentroidSpec extends AnyFunSuite {
   import SparkTestSession.{sfDir, spark}
+
+  /** The streaming queries here set `checkpointLocation` themselves, so
+    * the checkpoint file manager they get would depend on whether an
+    * earlier suite ran a checkpointed StreamPipeline sink in the shared
+    * session. Each test runs with the manager pinned to the one those
+    * sinks install, and the session's setting is put back after it. */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val key = LocalCheckpointFileManager.ConfKey
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+    try super.withFixture(test)
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   test("latestPerKeyStream converges to the batch latestPerKey result (CDC twin)") {
     import spark.implicits._

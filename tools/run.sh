@@ -2,7 +2,7 @@
 # Run a compiled graft main class directly against the image's Spark
 # jars — the sbt `runMain` equivalent without sbt's ~20 s startup, for
 # builder iteration (the driver still uses sbt). Usage:
-#   tools/run.sh graft.apps.QueryProbe q235 /root/testdata/sf0.1 3
+#   tools/run.sh graft.apps.Probe time q235 <sfDir> 3
 # Honors SPARK_DRIVER_MEM (default 8g) like build.sbt.
 set -e
 CLASSES=/root/repo/target/scala-2.13/classes
