@@ -939,9 +939,9 @@ object SparkEntry {
     }.distinct.sortBy(n => (number(n), n))
   }
 
-  /** The local session the mains (Bench, Verify, Probe) run in:
-    * `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-    * partitions, UTC, no UI. */
+  /** The local session every main (Bench, Verify, Probe,
+    * CorpusPipeline, EdaMain) runs in: `local[SPARK_GRAFT_CPUS]`
+    * (default 4) with as many shuffle partitions, UTC, no UI. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

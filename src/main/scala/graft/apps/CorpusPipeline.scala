@@ -390,15 +390,7 @@ object CorpusPipeline {
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-corpus").toString)
     val withSem = args.lift(2).contains("semdedup")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-corpus-pipeline")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
     try {
       val t0 = System.nanoTime()
       val docs = graft.engine.Tables.documents(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
-
+import graft.SparkEntry
 import graft.engine.Tables
 import graft.operators.Aggregates
 
@@ -13,14 +12,7 @@ import graft.operators.Aggregates
 object EdaMain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-eda")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     try {
       val events = Tables.events(spark, sfDir)
       val lineitem = Tables.lineitem(spark, sfDir)

@@ -1,9 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Content-addressed artifact directories for materialized views of a
-  * corpus (the IVF index, the dedup-cascade pair/label frames).
+  * corpus (the IVF index, the dedup-cascade pair/label frames), and
+  * the one commit gate every tier goes through.
   *
   * The address is `base`/`prefix`<hash of the source files' (path,
   * size, mtime)>, so a changed or different corpus changes the
@@ -21,6 +22,20 @@ import org.apache.spark.sql.SparkSession
   * substitution replaces with InMemoryRelation — a frame someone else
   * cached would silently report no files and either fail or, worse,
   * collapse every corpus to one address.
+  *
+  * Commit contract: a tier directory is committed iff `<dir>/_SUCCESS`
+  * exists on the Hadoop FS ([[hasSuccess]]); a build overwrites the
+  * directory, so a torn attempt (part files, no marker) is rebuilt
+  * from scratch. Every flat-Parquet tier writes through
+  * [[commitOnce]]. Three writers keep their own code, each still
+  * committing through a `_SUCCESS` that [[hasSuccess]] reads:
+  *  - the bucket-partitioned IVF writes (`Similarity.ensureIvfIndex`,
+  *    `compactIvfIndex`, the `appendToIvfIndex` staging), which need
+  *    `partitionBy`;
+  *  - `Similarity.prebuildPqIndex`, where one training run feeds both
+  *    the `codes` and the `books` tier;
+  *  - [[Landing]]'s hard-link assembly, which creates `_SUCCESS`
+  *    itself after the linked and moved files are in place.
   */
 object ContentAddress {
 
@@ -35,6 +50,16 @@ object ContentAddress {
     val p = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
+
+  /** Write `frame` as Parquet to `dir` iff `dir` is not committed;
+    * true iff it wrote. On reuse the by-name `frame` is never
+    * evaluated, so its plan (and any job building it) costs nothing.
+    */
+  def commitOnce(spark: SparkSession, dir: String)(frame: => DataFrame): Boolean =
+    !hasSuccess(spark, dir) && {
+      frame.write.mode("overwrite").parquet(dir)
+      true
+    }
 
   /** `tag` labels error messages with the calling operator.
     * `legacyPrefixes` names prefixes this artifact family PREVIOUSLY

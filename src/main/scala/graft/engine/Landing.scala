@@ -131,23 +131,21 @@ object Landing {
     * only. Rows land in fewer files in unchanged order; every tier
     * frame here is order-free (readers sort or aggregate).
     *
-    * Returns true iff a rewrite happened (false = `newTierDir`
-    * already committed, the prebuild reuse convention).
+    * Returns true iff a rewrite happened
+    * ([[ContentAddress.commitOnce]]).
     */
   def compactTier(spark: org.apache.spark.sql.SparkSession,
                   oldTierDir: String, newTierDir: String,
-                  bytesPerFile: Long = 128L << 20): Boolean = {
-    if (ContentAddress.hasSuccess(spark, newTierDir)) return false
-    require(new java.io.File(oldTierDir, "_SUCCESS").exists(),
-      s"compactTier requires a committed tier at $oldTierDir")
-    require(bytesPerFile > 0, "bytesPerFile must be positive")
-    val bytes = dataFiles(new java.io.File(oldTierDir)).map(_.length).sum
-    val nFiles = math.max(1L, (bytes + bytesPerFile - 1) / bytesPerFile)
-      .min(Int.MaxValue).toInt
-    spark.read.parquet(oldTierDir).coalesce(nFiles)
-      .write.mode("overwrite").parquet(newTierDir)
-    true
-  }
+                  bytesPerFile: Long = 128L << 20): Boolean =
+    ContentAddress.commitOnce(spark, newTierDir) {
+      require(ContentAddress.hasSuccess(spark, oldTierDir),
+        s"compactTier requires a committed tier at $oldTierDir")
+      require(bytesPerFile > 0, "bytesPerFile must be positive")
+      val bytes = dataFiles(new java.io.File(oldTierDir)).map(_.length).sum
+      val nFiles = math.max(1L, (bytes + bytesPerFile - 1) / bytesPerFile)
+        .min(Int.MaxValue).toInt
+      spark.read.parquet(oldTierDir).coalesce(nFiles)
+    }
 
   /** Assemble `newTierDir` as a pure LINK of `oldTierDir`'s data files
     * (no delta) — the frozen-tier form for append targets whose tier

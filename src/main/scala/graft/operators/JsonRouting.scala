@@ -146,18 +146,12 @@ object JsonRouting {
       "propsDir")
 
   /** Build the materialized [[propsLong]] frame under `dir/kv` iff
-    * missing (`_SUCCESS`-gated, resumable — the [[graft.operators
-    * .Dedup.prebuildCascade]] contract). Returns true iff a build
-    * happened, so a bench/deploy warm-up can account the one-off cost
-    * separately from probe measurements.
+    * missing ([[graft.engine.ContentAddress.commitOnce]]), so a
+    * bench/deploy warm-up can account the one-off cost separately from
+    * probe measurements.
     */
-  def prebuildPropsLong(ev: DataFrame, dir: String): Boolean = {
-    val kvDir = s"$dir/kv"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(ev.sparkSession, kvDir)
-    if (fresh)
-      propsLong(ev).write.mode("overwrite").parquet(kvDir)
-    fresh
-  }
+  def prebuildPropsLong(ev: DataFrame, dir: String): Boolean =
+    graft.engine.ContentAddress.commitOnce(ev.sparkSession, s"$dir/kv")(propsLong(ev))
 
   /** The materialized [[propsLong]] frame, built on first touch. */
   def propsLongCached(ev: DataFrame, dir: String): DataFrame = {

@@ -93,17 +93,11 @@ object Multimodal {
       "ahashDir", legacyPrefixes = Seq("ah_"))
 
   /** Build the materialized signature frame under `dir/sig` iff
-    * missing (`_SUCCESS`-gated, the prebuildCascade contract). Returns
-    * true iff a build happened.
+    * missing ([[graft.engine.ContentAddress.commitOnce]]).
     */
-  def prebuildAhashSignatures(docs: DataFrame, dir: String): Boolean = {
-    val sigDir = s"$dir/sig"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(docs.sparkSession, sigDir)
-    if (fresh)
-      ahashSignatures(docs, 48)
-        .write.mode("overwrite").parquet(sigDir)
-    fresh
-  }
+  def prebuildAhashSignatures(docs: DataFrame, dir: String): Boolean =
+    graft.engine.ContentAddress.commitOnce(docs.sparkSession, s"$dir/sig")(
+      ahashSignatures(docs, 48))
 
   /** The materialized signature frame, built on first touch. */
   def ahashSignaturesCached(docs: DataFrame, dir: String): DataFrame = {

@@ -77,11 +77,4 @@ object Projections {
   def filteredAvg(ev: DataFrame): DataFrame =
     ev.filter(col("event_type") === "click")
       .agg(count(lit(1)).as("n"), round(avg("value"), 4).as("avg_value"))
-
-  /** F4: AND-fold of isNotNull over a column list → validity flag
-    * (stream_inference.py:84-88). Exposed generically; the routing
-    * pipeline in [[JsonRouting]] uses the same fold.
-    */
-  def validityFlag(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.withColumn("is_valid", cols.map(col(_).isNotNull).reduce(_ && _))
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.engine.ContentAddress
+
 /** Similarity search over an embedding column (array<float>):
   *
   *  - brute-force cosine top-k against a small broadcast query set —
@@ -213,7 +215,7 @@ object Similarity {
     // semCcDir convention) — q269's compacted index lives as a
     // prefix-extending sibling the content address prunes/rebuilds on
     // the same corpus-change trigger as the main
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base,
+    ContentAddress.dirFor(spark, dataPath, base,
       s"ivf_$variant", "ivfIndexDir")
 
   /** Bucket-tagged projection of the corpus; also the index row
@@ -226,8 +228,7 @@ object Similarity {
     val withBucket = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("v"),
       lshBucketId(col("embedding").cast("array<double>")).as("bucket_id"))
-    if (rebuild ||
-        !graft.engine.ContentAddress.hasSuccess(emb.sparkSession, indexDir))
+    if (rebuild || !ContentAddress.hasSuccess(emb.sparkSession, indexDir))
       withBucket.repartition(col("bucket_id"))
         .write.mode("overwrite").partitionBy("bucket_id").parquet(indexDir)
     (withBucket, emb.sparkSession.read.parquet(indexDir))
@@ -239,8 +240,7 @@ object Similarity {
     * true when a build actually happened, false on reuse.
     */
   def prebuildIvfIndex(emb: DataFrame, indexDir: String): Boolean = {
-    val existed =
-      graft.engine.ContentAddress.hasSuccess(emb.sparkSession, indexDir)
+    val existed = ContentAddress.hasSuccess(emb.sparkSession, indexDir)
     if (!existed) ensureIvfIndex(emb, indexDir, rebuild = false)
     !existed
   }
@@ -276,10 +276,7 @@ object Similarity {
     * out of scope for a plain-parquet index.
     */
   def appendToIvfIndex(newVecs: DataFrame, indexDir: String): Unit = {
-    // java.io gate is CORRECT here (unlike the prebuilds' Hadoop-FS
-    // gates): this whole API is local-FS by design — the staged batch
-    // lands via per-file posix renames below
-    require(new java.io.File(indexDir, "_SUCCESS").exists(),
+    require(ContentAddress.hasSuccess(newVecs.sparkSession, indexDir),
       s"appendToIvfIndex requires an existing index at $indexDir")
     val resident = newVecs.sparkSession.read.parquet(indexDir).select("vec_id")
     // deterministic staging (review r18, the Landing.landDelta fix): a
@@ -703,22 +700,16 @@ object Similarity {
     // n8k10 bakes the frozen panel's constants into the address (the
     // cascadeDir convention) — a panel change re-addresses, never
     // serves a stale ground truth
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base, "anngt_n8k10_",
+    ContentAddress.dirFor(spark, dataPath, base, "anngt_n8k10_",
       "annGtDir", legacyPrefixes = Seq("anngt_"))
 
   /** Build the materialized ground truth under `dir/rel` iff missing
-    * (`_SUCCESS`-gated, the prebuildCascade contract). Returns true
-    * iff a build happened. Types are (BIGINT, BIGINT, INT) — exact
-    * parquet roundtrip.
+    * ([[graft.engine.ContentAddress.commitOnce]]). Types are (BIGINT,
+    * BIGINT, INT) — exact parquet roundtrip.
     */
-  def prebuildAnnGroundTruth(emb: DataFrame, dir: String): Boolean = {
-    val relDir = s"$dir/rel"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(emb.sparkSession, relDir)
-    if (fresh)
-      annGroundTruth(emb, nQueries = 8, k = 10)
-        .write.mode("overwrite").parquet(relDir)
-    fresh
-  }
+  def prebuildAnnGroundTruth(emb: DataFrame, dir: String): Boolean =
+    ContentAddress.commitOnce(emb.sparkSession, s"$dir/rel")(
+      annGroundTruth(emb, nQueries = 8, k = 10))
 
   /** Matryoshka-style truncation recall sweep: top-k recall of
     * brute-force cosine on PREFIX-TRUNCATED embeddings (dims 8/16/32
@@ -886,21 +877,17 @@ object Similarity {
     */
   def kmCellsDir(spark: org.apache.spark.sql.SparkSession, dataPath: String,
                  base: String, k: Int = 4, iters: Int = 3): String =
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base,
+    ContentAddress.dirFor(spark, dataPath, base,
       s"km_k${k}i${iters}_", "kmCellsDir")
 
   /** Build the materialized cells frame under `dir/cells` iff missing
-    * (`_SUCCESS`-gated through the Hadoop FS). Returns true iff a
-    * build happened (`km_build_sec` in the bench warm-up).
+    * ([[graft.engine.ContentAddress.commitOnce]]; `km_build_sec` in
+    * the bench warm-up).
     */
   def prebuildKmeansCells(emb: DataFrame, dir: String, k: Int = 4,
-                          iters: Int = 3): Boolean = {
-    val cDir = s"$dir/cells"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(emb.sparkSession, cDir)
-    if (fresh)
-      kmCells(emb, k, iters).write.mode("overwrite").parquet(cDir)
-    fresh
-  }
+                          iters: Int = 3): Boolean =
+    ContentAddress.commitOnce(emb.sparkSession, s"$dir/cells")(
+      kmCells(emb, k, iters))
 
   /** [[kmeans]] probing the materialized cells (spec-asserted ≡
     * self-computing — the roundtrip is exact).
@@ -1138,14 +1125,21 @@ object Similarity {
     // signs files, not filters) — q266's yesterday-corpus index and
     // its appended twin; it trails the setting, the semCcDir
     // convention (prefix-extending siblings survive pruning)
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base,
+    ContentAddress.dirFor(spark, dataPath, base,
       s"pq${m}x${k}i${iters}_$variant", "pqIndexDir")
+
+  /** Every `dir/<tier>` of `tiers` is committed. */
+  private def committed(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        tiers: String*): Boolean =
+    tiers.forall(t => ContentAddress.hasSuccess(spark, s"$dir/$t"))
 
   /** Build the PQ index now iff absent (the `prebuildIvfIndex` /
     * `prebuildCascade` warm-up hook): ONE train per subspace feeds
     * both the code and the codebook frames — where the self-computing
-    * q192/q193/q194 entries would train 3× each per bench pass.
-    * Returns true when a build happened.
+    * q192/q193/q194 entries would train 3× each per bench pass. That
+    * shared training run is why the two tiers are written here rather
+    * than through two [[graft.engine.ContentAddress.commitOnce]]
+    * calls. Returns true when a build happened.
     */
   def prebuildPqIndex(emb: DataFrame, dir: String, m: Int = 2, k: Int = 4,
                       iters: Int = 3): Boolean = {
@@ -1153,9 +1147,7 @@ object Similarity {
     // base (hdfs://x -> /cwd/hdfs:/x) and would pin the prebuild local
     val codesDir = s"$dir/codes"
     val booksDir = s"$dir/books"
-    val fresh =
-      !graft.engine.ContentAddress.hasSuccess(emb.sparkSession, codesDir) ||
-      !graft.engine.ContentAddress.hasSuccess(emb.sparkSession, booksDir)
+    val fresh = !committed(emb.sparkSession, dir, "codes", "books")
     if (fresh) {
       val parts = (0 until m).map { s =>
         val sub = emb.select(col("vec_id"),
@@ -1204,12 +1196,14 @@ object Similarity {
     * partition column — which is exactly the rebuild's shuffle minus
     * the bucket computation, paid once per maintenance interval.
     * Probes over the compacted index are identical (same rows, same
-    * partition pruning). Returns true iff a rewrite happened.
+    * partition pruning). Returns true iff a rewrite happened. The
+    * `partitionBy` write is why this does not go through
+    * [[graft.engine.ContentAddress.commitOnce]]; the gate is the same.
     */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       oldIndexDir: String, newIndexDir: String): Boolean = {
-    if (graft.engine.ContentAddress.hasSuccess(spark, newIndexDir)) return false
-    require(new java.io.File(oldIndexDir, "_SUCCESS").exists(),
+    if (ContentAddress.hasSuccess(spark, newIndexDir)) return false
+    require(ContentAddress.hasSuccess(spark, oldIndexDir),
       s"compactIvfIndex requires a committed index at $oldIndexDir")
     spark.read.parquet(oldIndexDir)
       .repartition(col("bucket_id"))
@@ -1266,7 +1260,6 @@ object Similarity {
   def appendToPqIndex(newVecs: DataFrame, oldDir: String, newDir: String,
                       m: Int = 2, k: Int = 4, iters: Int = 3): Boolean = {
     val spark = newVecs.sparkSession
-    def committed(d: String) = graft.engine.ContentAddress.hasSuccess(spark, d)
     // the prefix bakes the FULL (m, k, iters) setting ([[pqIndexDir]]);
     // reject a dir addressed for any other — a 2-subspace batch
     // landing in a 4-subspace address would serve half-width codes,
@@ -1275,16 +1268,16 @@ object Similarity {
     // first cut checked only the m fragment)
     Seq(oldDir, newDir).foreach(d => require(d.contains(s"pq${m}x${k}i${iters}_"),
       s"appendToPqIndex: dir $d was not addressed for (m=$m, k=$k, iters=$iters)"))
-    require(committed(s"$oldDir/codes") && committed(s"$oldDir/books"),
+    require(committed(spark, oldDir, "codes", "books"),
       s"appendToPqIndex requires a committed index at $oldDir")
-    if (committed(s"$newDir/codes") && committed(s"$newDir/books")) return false
+    if (committed(spark, newDir, "codes", "books")) return false
     require(newVecs.select("vec_id")
         .join(spark.read.parquet(s"$oldDir/codes").select("vec_id").distinct(),
           Seq("vec_id"), "left_semi").isEmpty,
       "appendToPqIndex: batch vec_ids overlap the resident index")
-    if (!committed(s"$newDir/books"))
+    if (!committed(spark, newDir, "books"))
       graft.engine.Landing.linkTier(s"$oldDir/books", s"$newDir/books")
-    if (!committed(s"$newDir/codes"))
+    if (!committed(spark, newDir, "codes"))
       graft.engine.Landing.landDelta(encodeAgainstBooks(newVecs, oldDir, m),
         s"$oldDir/codes", s"$newDir/codes")
     true

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.engine.ContentAddress
+
 /** Text-analysis layer for LLM-training-data pipelines: token
   * counting (whitespace + regex "BPE-ish"), quality scoring, language
   * ID heuristics, and rolling-hash document fingerprinting.
@@ -480,21 +482,16 @@ object TextAnalysis {
     */
   def bigramLmDir(spark: org.apache.spark.sql.SparkSession, dataPath: String,
                   base: String): String =
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base, "blm_n2_",
+    ContentAddress.dirFor(spark, dataPath, base, "blm_n2_",
       "bigramLmDir")
 
   /** Build the materialized bigram LM under `dir/model` iff missing
-    * (`_SUCCESS`-gated, resumable — the prebuild contract). The model
-    * build was HALF of q121's cost (one of its two corpus scans) and
-    * is a pure function of the corpus, so it runs once per snapshot.
+    * ([[graft.engine.ContentAddress.commitOnce]]). The model build was
+    * HALF of q121's cost (one of its two corpus scans) and is a pure
+    * function of the corpus, so it runs once per snapshot.
     */
-  def prebuildBigramLm(docs: DataFrame, dir: String): Boolean = {
-    val mDir = s"$dir/model"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(docs.sparkSession, mDir)
-    if (fresh)
-      bigramLmModel(docs).write.mode("overwrite").parquet(mDir)
-    fresh
-  }
+  def prebuildBigramLm(docs: DataFrame, dir: String): Boolean =
+    ContentAddress.commitOnce(docs.sparkSession, s"$dir/model")(bigramLmModel(docs))
 
   /** [[bigramLmScore]] against the materialized model: ONE corpus
     * scan (the scoring pass) + a vocabulary-bounded parquet read that
@@ -535,7 +532,7 @@ object TextAnalysis {
                  base: String, variant: String = ""): String =
     // `variant` keys a SLICE of the same document files (the semCcDir
     // convention) — q270's yesterday-corpus frame and its appended twin
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base,
+    ContentAddress.dirFor(spark, dataPath, base,
       s"tok_$variant", "tokenTfDir")
 
   /** Incremental token-tf APPEND — the q264–q267 contract on the
@@ -552,10 +549,9 @@ object TextAnalysis {
     */
   def appendToTokenTf(batch: DataFrame, oldDir: String, newDir: String): Boolean = {
     val spark = batch.sparkSession
-    def committed(d: String) = graft.engine.ContentAddress.hasSuccess(spark, d)
-    require(committed(s"$oldDir/tf"),
+    require(ContentAddress.hasSuccess(spark, s"$oldDir/tf"),
       s"appendToTokenTf requires a committed tf tier at $oldDir")
-    if (committed(s"$newDir/tf")) return false
+    if (ContentAddress.hasSuccess(spark, s"$newDir/tf")) return false
     require(batch.select("doc_id")
         .join(spark.read.parquet(s"$oldDir/tf").select("doc_id").distinct(),
           Seq("doc_id"), "left_semi").isEmpty,
@@ -582,18 +578,12 @@ object TextAnalysis {
   }
 
   /** Build the materialized [[tokenTf]] frame under `dir/tf` iff
-    * missing (`_SUCCESS`-gated, resumable — the
-    * [[graft.operators.Dedup.prebuildCascade]] contract). Returns true
-    * iff a build happened, so a bench/deploy warm-up can account the
-    * one-off cost separately from probe measurements.
+    * missing ([[graft.engine.ContentAddress.commitOnce]]), so a
+    * bench/deploy warm-up can account the one-off cost separately from
+    * probe measurements.
     */
-  def prebuildTokenTf(docs: DataFrame, dir: String): Boolean = {
-    val tfDir = s"$dir/tf"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(docs.sparkSession, tfDir)
-    if (fresh)
-      tokenTf(docs).write.mode("overwrite").parquet(tfDir)
-    fresh
-  }
+  def prebuildTokenTf(docs: DataFrame, dir: String): Boolean =
+    ContentAddress.commitOnce(docs.sparkSession, s"$dir/tf")(tokenTf(docs))
 
   /** The materialized [[tokenTf]] frame, built on first touch. */
   def tokenTfCached(docs: DataFrame, dir: String): DataFrame = {
@@ -778,27 +768,21 @@ object TextAnalysis {
   def textRankDir(spark: org.apache.spark.sql.SparkSession,
                   dataPath: String, base: String, vocab: Int = 50,
                   iters: Int = 10, damping: Double = 0.85): String =
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base,
+    ContentAddress.dirFor(spark, dataPath, base,
       s"tr_v${vocab}d${math.rint(damping * 100).toInt}i${iters}_",
       "textRankDir")
 
   /** Build the materialized converged-rank frame under `dir/ranks` iff
-    * missing (`_SUCCESS`-gated through the Hadoop FS). `tf` lets the
-    * bench warm-up feed the already-materialized token-tf frame so the
-    * one-time build is itself a probe of that frame, not a corpus
-    * re-tokenization. Returns true iff a build happened
-    * (`tr_build_sec` accounting).
+    * missing ([[graft.engine.ContentAddress.commitOnce]];
+    * `tr_build_sec` accounting). `tf` lets the bench warm-up feed the
+    * already-materialized token-tf frame so the one-time build is
+    * itself a probe of that frame, not a corpus re-tokenization.
     */
   def prebuildTextRank(docs: DataFrame, dir: String,
                        tf: Option[DataFrame] = None, vocab: Int = 50,
-                       iters: Int = 10, damping: Double = 0.85): Boolean = {
-    val rDir = s"$dir/ranks"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(docs.sparkSession, rDir)
-    if (fresh)
-      textRankRanksFrom(tf.getOrElse(tokenTf(docs)), vocab, iters, damping)
-        .write.mode("overwrite").parquet(rDir)
-    fresh
-  }
+                       iters: Int = 10, damping: Double = 0.85): Boolean =
+    ContentAddress.commitOnce(docs.sparkSession, s"$dir/ranks")(
+      textRankRanksFrom(tf.getOrElse(tokenTf(docs)), vocab, iters, damping))
 
   /** [[textRank]] probing the materialized converged ranks: a ≤-vocab
     * row parquet scan + round + sort + limit — no graph build, no
@@ -1156,22 +1140,16 @@ object TextAnalysis {
     */
   def phraseIndexDir(spark: org.apache.spark.sql.SparkSession,
                      dataPath: String, base: String): String =
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base, "post_n3_",
+    ContentAddress.dirFor(spark, dataPath, base, "post_n3_",
       "phraseIndexDir")
 
   /** Build the materialized phrase index under `dir/postings` iff
-    * missing (`_SUCCESS`-gated through the Hadoop FS — works on any
-    * filesystem the artifact base lives on). Returns true iff a build
-    * happened, so the bench warm-up accounts the one-off cost
-    * (`post_build_sec`) separately from probe measurements.
+    * missing ([[graft.engine.ContentAddress.commitOnce]]), so the
+    * bench warm-up accounts the one-off cost (`post_build_sec`)
+    * separately from probe measurements.
     */
-  def prebuildPhraseIndex(docs: DataFrame, dir: String): Boolean = {
-    val pDir = s"$dir/postings"
-    val fresh = !graft.engine.ContentAddress.hasSuccess(docs.sparkSession, pDir)
-    if (fresh)
-      phrasePerDoc(docs).write.mode("overwrite").parquet(pDir)
-    fresh
-  }
+  def prebuildPhraseIndex(docs: DataFrame, dir: String): Boolean =
+    ContentAddress.commitOnce(docs.sparkSession, s"$dir/postings")(phrasePerDoc(docs))
 
   /** [[phraseSearch]] probing the materialized phrase index: the probe
     * starts at a narrow (STRING, BIGINT, BIGINT) parquet scan — no
@@ -1777,14 +1755,14 @@ object TextAnalysis {
     // (panel size, depth, BM25 k1/b and the hybrid kEach/dims/rrfK
     // behind the v1 tag) — the cascadeDir cc${t}b${bands}_ convention,
     // so a constant change re-addresses instead of serving stale frames
-    graft.engine.ContentAddress.dirFor(spark, dataPath, base,
+    ContentAddress.dirFor(spark, dataPath, base,
       s"arms_n${armNQueries}k${armK}v1_", "retrievalArmsDir",
       legacyPrefixes = Seq("arms_"))
 
   /** Build the materialized arm frames under `dir/{bm25,tfidf,hybrid,
-    * rel}` iff missing (per-frame `_SUCCESS` gates — resumable, the
-    * [[graft.operators.Dedup.prebuildCascade]] contract). Returns true
-    * iff any build happened. `tfFrame` lets a warm-up that already
+    * rel}` iff missing, each through its own
+    * [[graft.engine.ContentAddress.commitOnce]]. Returns true iff any
+    * build happened. `tfFrame` lets a warm-up that already
     * materialized [[tokenTf]] feed the builds from the parquet frame
     * instead of a fresh text parse; semantics are identical either
     * way (the tf frame is exact).
@@ -1792,26 +1770,19 @@ object TextAnalysis {
   def prebuildRetrievalArms(docs: DataFrame, dir: String,
                             tfFrame: Option[DataFrame] = None): Boolean = {
     lazy val tf = tfFrame.getOrElse(tokenTf(docs))
-    val builders: Seq[(String, () => DataFrame)] = Seq(
-      ("bm25", () => bm25TopKFrom(docs, tf, armNQueries, armK)),
-      ("tfidf", () => tfidfTopKFrom(docs, tf, armNQueries, armK)),
-      ("hybrid", () => hybridRrfTopKFrom(docs, tf, armNQueries, kEach = 20,
+    def arm(name: String)(frame: => DataFrame): () => Boolean =
+      () => ContentAddress.commitOnce(docs.sparkSession, s"$dir/$name")(frame)
+    // the arm builds are independent jobs over the one materialized
+    // tf frame, each writing its own subdir — overlap them (the
+    // prebuildPairFamilies pattern: one arm's straggler tail
+    // back-fills with the next arm's tasks; the shared `tf` lazy is
+    // forced under its own monitor, and a plain DataFrame plan is safe
+    // to share across driver threads)
+    Dedup.runBuildPool(Seq(
+      arm("bm25")(bm25TopKFrom(docs, tf, armNQueries, armK)),
+      arm("tfidf")(tfidfTopKFrom(docs, tf, armNQueries, armK)),
+      arm("hybrid")(hybridRrfTopKFrom(docs, tf, armNQueries, kEach = 20,
         kOut = armK, dims = 64, rrfK = 60)),
-      ("rel", () => relevanceFrom(docs, armNQueries)))
-    val missing = builders.filter { case (name, _) =>
-      !graft.engine.ContentAddress.hasSuccess(docs.sparkSession, s"$dir/$name")
-    }
-    if (missing.nonEmpty) {
-      // the arm builds are independent jobs over the one materialized
-      // tf frame, each writing to its own per-frame-_SUCCESS-gated
-      // subdir — overlap them (the prebuildPairFamilies pattern: one
-      // arm's straggler tail back-fills with the next arm's tasks;
-      // the shared `tf` lazy is forced under its own monitor, and a
-      // plain DataFrame plan is safe to share across driver threads)
-      Dedup.runBuildPool(missing.map { case (name, b) =>
-        () => b().write.mode("overwrite").parquet(s"$dir/$name")
-      })
-    }
-    missing.nonEmpty
+      arm("rel")(relevanceFrom(docs, armNQueries))))
   }
 }

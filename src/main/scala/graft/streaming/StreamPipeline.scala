@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.graft.{DirectParquet, LocalCheckpointFileManager}
@@ -162,6 +162,11 @@ object StreamPipeline {
       .foreachBatch(fn)
   }
 
+  /** Both tiers of an ingest-chain epoch address are committed. */
+  private def epochCommitted(spark: SparkSession, dir: String): Boolean =
+    Seq("sig", "pairs").forall(t =>
+      graft.engine.ContentAddress.hasSuccess(spark, s"$dir/$t"))
+
   /** One micro-batch landing on the SimHash append CHAIN — the unit
     * [[dedupIngestSink]] drives, exposed for direct testing (the
     * [[writeEpochOnce]] convention). Epoch `epochId`'s batch appends
@@ -188,10 +193,8 @@ object StreamPipeline {
                        dirForEpoch: Long => String,
                        maxHamming: Int = 3): Boolean = {
     val spark = batch.sparkSession
-    def committedAll(d: String) = Seq("sig", "pairs").forall(t =>
-      graft.engine.ContentAddress.hasSuccess(spark, s"$d/$t"))
     val oldDir = ((epochId - 1) to 0L by -1L).iterator.map(dirForEpoch)
-      .find(committedAll).getOrElse(day0Dir)
+      .find(epochCommitted(spark, _)).getOrElse(day0Dir)
     // a STREAM cannot promise id-disjointness the way a curated daily
     // batch can (re-crawls, upstream at-least-once sources), and the
     // append's overlap `require` inside foreachBatch would be a poison
@@ -257,11 +260,9 @@ object StreamPipeline {
   def pruneIngestChain(spark: SparkSession, dirForEpoch: Long => String,
                        headEpoch: Long, keep: Int = 2): Seq[Long] = {
     require(keep >= 1, "retention must keep at least the chain head")
-    def committedAll(d: String) = Seq("sig", "pairs").forall(t =>
-      graft.engine.ContentAddress.hasSuccess(spark, s"$d/$t"))
     val existing = (headEpoch to 0L by -1L)
       .filter(e => new java.io.File(dirForEpoch(e)).exists())
-    val kept = existing.filter(e => committedAll(dirForEpoch(e)))
+    val kept = existing.filter(e => epochCommitted(spark, dirForEpoch(e)))
       .take(keep).toSet
     val drop = existing.filterNot(kept)
     drop.foreach(e => org.apache.commons.io.FileUtils
@@ -328,10 +329,6 @@ object StreamPipeline {
       .selectExpr("event_type", "hr", "cnt",
         "round(CAST(s AS DOUBLE) / m, 4) AS baseline",
         "round(CAST(cnt AS DOUBLE) * m / s, 4) AS ratio")
-
-  /** T4: block on a started query (stream_inference.py:180-181). */
-  def awaitAll(queries: Seq[StreamingQuery]): Unit =
-    queries.foreach(_.awaitTermination())
 
   /** Native session windows ON THE STREAM — the same
     * `session_window` expression as the batch

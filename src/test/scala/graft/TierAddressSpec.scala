@@ -2,11 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Tiers
+import graft.engine.{ContentAddress, Tiers}
+import graft.operators.Dedup
 
 /** Pins every materialized tier's address: tiers already on disk are
   * reused only while base names, prefixes and hashes stay
-  * byte-identical, so any drift here rebuilds (and orphans) them.
+  * byte-identical, so any drift here rebuilds (and orphans) them. Also
+  * pins the commit gate every tier writes through
+  * ([[ContentAddress.commitOnce]]).
   */
 class TierAddressSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -106,6 +109,75 @@ class TierAddressSpec extends AnyFunSuite {
         assert(again(t.key).drop(tmp.length) ==
           first._2(t.key).drop(first._1.length), t.key)
       }
+    }
+  }
+
+  private def withScratch[A](f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-commit").toFile
+    try f(dir.getAbsolutePath)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  private def rows(dir: String): Seq[Long] =
+    spark.read.parquet(dir).as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().toSeq.sorted
+
+  test("commitOnce: a first call writes the frame, commits it and returns true") {
+    withScratch { base =>
+      val dir = s"$base/t"
+      assert(ContentAddress.commitOnce(spark, dir)(spark.range(3).toDF("x")))
+      assert(ContentAddress.hasSuccess(spark, dir))
+      assert(rows(dir) == Seq(0L, 1L, 2L))
+    }
+  }
+
+  test("commitOnce: a committed dir returns false without evaluating the frame") {
+    withScratch { base =>
+      val dir = s"$base/t"
+      ContentAddress.commitOnce(spark, dir)(spark.range(3).toDF("x"))
+      assert(!ContentAddress.commitOnce(spark, dir)(
+        throw new AssertionError("the frame of a committed tier was built")))
+      assert(rows(dir) == Seq(0L, 1L, 2L))
+    }
+  }
+
+  test("commitOnce: a torn dir (part files, no _SUCCESS) is overwritten and committed") {
+    withScratch { base =>
+      val dir = s"$base/t"
+      spark.range(10, 15).toDF("x").write.parquet(dir)
+      assert(new java.io.File(dir, "_SUCCESS").delete())
+      java.nio.file.Files.write(new java.io.File(dir, "part-torn.parquet").toPath,
+        "not parquet".getBytes("UTF-8"))
+      assert(!ContentAddress.hasSuccess(spark, dir))
+      assert(ContentAddress.commitOnce(spark, dir)(spark.range(3).toDF("x")))
+      assert(ContentAddress.hasSuccess(spark, dir))
+      assert(rows(dir) == Seq(0L, 1L, 2L))
+    }
+  }
+
+  test("prebuildPairFamilies: a lost _SUCCESS rebuilds that family alone") {
+    import spark.implicits._
+    withScratch { base =>
+      val corpusDir = s"$base/corpus"
+      val rnd = new scala.util.Random(11)
+      (1L to 30L).map(i => (i, Seq.fill(12)("t" + rnd.nextInt(7)).mkString(" ")))
+        .toDF("doc_id", "text").write.parquet(corpusDir)
+      val docs = spark.read.parquet(corpusDir)
+      val dir = Dedup.cascadeDir(spark, corpusDir, s"$base/tiers")
+      val families = Seq("pjpairs_t80", "cjpairs_t90", "snmpairs_t20",
+        "winpairs_n3_w4", "candcap_50", "candr2_b4r2")
+      def marker(f: String) = new java.io.File(s"$dir/$f/_SUCCESS")
+      assert(Dedup.prebuildPairFamilies(docs, dir), "first call must build")
+      assert(families.forall(f => marker(f).exists()))
+      val mtimes = families.map(f => f -> marker(f).lastModified()).toMap
+      assert(marker("winpairs_n3_w4").delete())
+      Thread.sleep(20)
+      assert(Dedup.prebuildPairFamilies(docs, dir), "a lost family must rebuild")
+      assert(marker("winpairs_n3_w4").exists())
+      for (f <- families if f != "winpairs_n3_w4")
+        assert(marker(f).lastModified() == mtimes(f), s"$f was rewritten")
+      assert(!Dedup.prebuildPairFamilies(docs, dir), "a third call must reuse")
+      spark.catalog.clearCache()
     }
   }
 }
